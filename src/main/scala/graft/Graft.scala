@@ -1764,6 +1764,7 @@ object Graft {
     * join. */
   def pageRank(edges: DataFrame, iters: Int = 3,
       dampingPct: Int = 85): DataFrame = {
+    requirePageRankArgs(iters, dampingPct)
     // the caller's edge plan materializes exactly ONCE (an un-severed
     // lineage recomputes it per loop reference — measured 2x on q70),
     // PRE-PARTITIONED on the probe key via the partitioning-DECLARING
@@ -1774,6 +1775,15 @@ object Graft {
     pageRankRounds(
       checkpointOn(edges.select(col("src"), col("dst")), nPart, "src"),
       None, iters, dampingPct)
+  }
+
+  /** The PageRank family's argument contract. The public wrappers
+    * check it BEFORE their eager edge checkpoint, so an invalid call
+    * fails without dispatching a job. */
+  private def requirePageRankArgs(iters: Int, dampingPct: Int): Unit = {
+    require(iters >= 1 && iters <= 20, s"iters out of range: $iters")
+    require(dampingPct >= 0 && dampingPct <= 100,
+      s"dampingPct out of range: $dampingPct")
   }
 
   /** The shared [[pageRank]]/[[pageRankFrom]] loop over a PREPARED
@@ -1799,9 +1809,7 @@ object Graft {
     * the contrib scatter's groupBy(dst->node), the irreducible one. */
   private[graft] def pageRankRounds(e: DataFrame, init: Option[DataFrame],
       iters: Int, dampingPct: Int): DataFrame = {
-    require(iters >= 1 && iters <= 20, s"iters out of range: $iters")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"dampingPct out of range: $dampingPct")
+    requirePageRankArgs(iters, dampingPct)
     val nPart = e.sparkSession.sessionState.conf.numShufflePartitions
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__outdeg"))
     val edgesD = checkpointOn(
@@ -1875,6 +1883,7 @@ object Graft {
     * node-sized hash join at build time. */
   def pageRankFrom(edges: DataFrame, init: DataFrame, iters: Int = 2,
       dampingPct: Int = 85): DataFrame = {
+    requirePageRankArgs(iters, dampingPct)
     val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
     pageRankRounds(
       checkpointOn(edges.select(col("src"), col("dst")), nPart, "src"),
@@ -1911,9 +1920,7 @@ object Graft {
     * 0 = absent. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iters: Int = 3, dampingPct: Int = 85): DataFrame = {
-    require(iters >= 1 && iters <= 20, s"iters out of range: $iters")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"dampingPct out of range: $dampingPct")
+    requirePageRankArgs(iters, dampingPct)
     val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
     val e = checkpointOn(edges.select(col("src"), col("dst")), nPart, "src")
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__outdeg"))

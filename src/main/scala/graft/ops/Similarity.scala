@@ -1122,6 +1122,8 @@ object Similarity {
       .select($"vec_id", $"embedding", $"cell")
     val disagree = atRest.exceptAll(scratch)
       .unionAll(scratch.exceptAll(atRest)).count()
+    // the gate is done with it: release before the check can throw
+    scratch.unpersist()
     require(disagree == 0,
       "migrated IVF layout diverged from from-scratch assignment")
     ivfSearchCorpusWith(s, dir, cent, cells =>

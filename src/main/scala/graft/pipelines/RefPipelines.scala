@@ -22,9 +22,10 @@ import org.apache.spark.sql.types._
   * (scan -> project/explode -> sink) off ONE parsed source — no
   * shuffles at all. The reference processes one document per Python
   * loop iteration (`P:774`); here a million documents are one
-  * distributed read. Callers should `.persist()` the parsed source
-  * before fanning out to the ~22 sinks (the pandas `data_dict` reuse,
-  * done distributed).
+  * distributed read per form family. [[Router.route]] persists each
+  * family's parsed source itself (the pandas `data_dict` reuse, done
+  * distributed) and reads the families concurrently; release the
+  * sources with [[Router.routeManaged]].
   *
   * Reference bugs intentionally NOT replicated (SURVEY.md §2a):
   * P8 vectorized row-slice mask (`P:94`), the `reg_items` path bug
@@ -129,8 +130,7 @@ object Router {
 
   /** [[route]] with an unpersist handle for long-lived sessions. */
   def routeManaged(spark: SparkSession, dir: String): Routed = {
-    val sources = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    val tables = routeImpl(spark, dir, sources += _)
+    val (tables, sources) = routeImpl(spark, dir)
     Routed(tables, () => sources.foreach(_.unpersist()))
   }
 
@@ -142,10 +142,19 @@ object Router {
     * it infers its OWN schema, exactly like the reference's per-file
     * `pd.read_json`. */
   def route(spark: SparkSession, dir: String): Map[String, DataFrame] =
-    routeImpl(spark, dir, _ => ())
+    routeImpl(spark, dir)._1
 
-  private def routeImpl(spark: SparkSession, dir: String,
-      onPersist: DataFrame => Unit): Map[String, DataFrame] = {
+  /** The routed tables plus the persisted parsed sources they derive
+    * from. Each non-empty form family's read -> infer -> persist ->
+    * pipeline build is one independent unit, and the (at most four)
+    * units run concurrently ([[graft.internal.DriverPool]], one thread
+    * per family): each unit is one schema-inference job plus
+    * driver-side plan building, so run serially the executors idle
+    * through most of the route. If any unit fails, the sources the
+    * others persisted are unpersisted before the failure is rethrown
+    * — a failed route leaks no cache. */
+  private def routeImpl(spark: SparkSession, dir: String)
+      : (Map[String, DataFrame], Seq[DataFrame]) = {
     import org.apache.hadoop.fs.{FileSystem, Path}
     val fs = FileSystem.get(java.net.URI.create(dir),
       spark.sparkContext.hadoopConfiguration)
@@ -155,8 +164,8 @@ object Router {
     // (and Demo counts + writes each) — without caching, every action
     // re-lists, re-infers, and re-parses the JSON (the pandas
     // `data_dict` reuse of SURVEY §4, done distributed).
-    def read(paths: Seq[String]): Option[DataFrame] = {
-      if (paths.isEmpty) return None
+    def build(paths: Seq[String], pipe: DataFrame => Map[String, DataFrame])
+        : Option[(DataFrame, Map[String, DataFrame])] = {
       val df = parseClean(spark, paths)
       // all-corrupt batch: nothing parseable survives -> no data columns
       // beyond provenance -> the whole form family is skipped, exactly
@@ -164,8 +173,8 @@ object Router {
       if (df.columns.forall(_ == "source_file")) None
       else {
         val p = df.persist()
-        onPersist(p)
-        Some(p)
+        try Some(p -> pipe(p))
+        catch { case scala.util.control.NonFatal(e) => p.unpersist(); throw e }
       }
     }
     // substring match, not suffix: the reference routes on
@@ -176,18 +185,25 @@ object Router {
     val (bank, r1) = files.partition(p => base(p).contains("_bank_scrape"))
     val (credit, r2) = r1.partition(p => base(p).contains("_credit_report"))
     val (action, rest) = r2.partition(p => base(p).contains("_action"))
-    val outputs = Seq(
-      read(action).map(RefPipelines.recpipe),
-      read(bank).map(RefPipelines.bankpipe),
-      read(credit).map(RefPipelines.creditpipe),
-      read(rest).map(RefPipelines.jsonpipe)).flatten
+    val families = Seq[(Seq[String], DataFrame => Map[String, DataFrame])](
+      action -> RefPipelines.recpipe, bank -> RefPipelines.bankpipe,
+      credit -> RefPipelines.creditpipe, rest -> RefPipelines.jsonpipe)
+      .filter(_._1.nonEmpty)
+    val outcomes = graft.internal.DriverPool.runAll(spark, families.size,
+      families.map { case (paths, pipe) => () => build(paths, pipe) })
+    val built = outcomes.flatMap(_.toOption).flatten
+    outcomes.collectFirst { case scala.util.Failure(e) =>
+      built.foreach(_._1.unpersist())
+      throw e
+    }
     // Pipelines share table names (bankpipe and jsonpipe both emit
     // bank_account, transactions, …) — the reference APPENDS both to the
     // same SQL table (`P:133-147` vs `P:667-763`), so same-named outputs
-    // union; differing column sets null-fill, like SQL append of a
-    // subset-schema frame.
-    outputs.flatten.groupMapReduce(_._1)(_._2)(
+    // union in family order; differing column sets null-fill, like SQL
+    // append of a subset-schema frame.
+    val tables = built.flatMap(_._2).groupMapReduce(_._1)(_._2)(
       (a, b) => a.unionByName(b, allowMissingColumns = true))
+    (tables, built.map(_._1))
   }
 }
 
@@ -288,8 +304,9 @@ object RefPipelines {
           col("mask_id"),
           col("sf_id").as("SF_ID"), col("Report_Date").as("Report_date"))): _*)
 
-      val txns = if (accSchema.find(_.name == "transactions").map(_.dataType)
-          .exists(_.isInstanceOf[ArrayType])) {
+      // array OF STRUCTS only: a batch whose accounts all carry `[]`
+      // infers array<string>, which has no fields to star-expand
+      val txns = if (structArrayAt(docs, s"$path.transactions").isDefined) {
         val t = acc
           .select(col("sf_id"), col("Report_Date"), col("account_id"),
             col("mask_id"), explode(col("a.transactions")).as("t"))

@@ -69,13 +69,29 @@ object Sinks {
   /** Fan a map of tables out to a sink, tolerating per-table failures
     * exactly like the reference's try/except-per-append (P17,
     * `P:667-763`) — one broken table must not kill the other 21. Returns
-    * (table -> error) for the failures. */
+    * (table -> error) for the failures.
+    *
+    * The sinks run CONCURRENTLY ([[graft.internal.DriverPool]]): each
+    * table is one small append job plus driver-side planning, so run
+    * serially the executors idle between appends. `sink` is therefore
+    * called from several threads at once, always for DISTINCT table
+    * names, and must be thread-safe (the JDBC and parquet appends here
+    * are: each writes its own table/path). Every call runs under the
+    * caller's job group and session. NonFatal failures are isolated per
+    * table; a fatal one (OOM, LinkageError) is rethrown, not returned
+    * as one more tolerated failure. Width is min(tables, max(2,
+    * defaultParallelism)) — derived, with no config option. */
   def fanOut(tables: Map[String, DataFrame], sink: (String, DataFrame) => Unit)
       : Map[String, Throwable] =
-    tables.flatMap { case (name, df) =>
-      try { sink(name, df); None }
-      // NonFatal only: an OOM/VM error must propagate, not masquerade
-      // as one more tolerated per-table failure
-      catch { case scala.util.control.NonFatal(e) => Some(name -> e) }
+    if (tables.isEmpty) Map.empty
+    else {
+      val spark = tables.head._2.sparkSession
+      val width = math.max(2, spark.sparkContext.defaultParallelism)
+      val named = tables.toSeq
+      val outcomes = graft.internal.DriverPool.runAll(spark, width,
+        named.map { case (name, df) => () => sink(name, df) })
+      named.zip(outcomes).collect {
+        case ((name, _), scala.util.Failure(e)) => name -> e
+      }.toMap
     }
 }

@@ -957,6 +957,18 @@ class GraftFacadeSpec extends SparkSuiteBase {
       "center of the path outranks the symmetric endpoints")
   }
 
+  test("pageRank/pageRankFrom: invalid arguments fail before any job is dispatched") {
+    // the wrappers' eager edge checkpoint is a job; validation runs first
+    val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
+    val init = Seq(("a", 1000000000L)).toDF("node", "rank_e9")
+    val (_, groups) = jobGroupsDuring {
+      intercept[IllegalArgumentException](Graft.pageRank(edges, iters = 0))
+      intercept[IllegalArgumentException](Graft.pageRank(edges, dampingPct = 101))
+      intercept[IllegalArgumentException](Graft.pageRankFrom(edges, init, iters = 0))
+    }
+    assert(groups.isEmpty, s"${groups.size} job(s) ran before validation")
+  }
+
   test("pageRank: a sink node (dst-only) keeps its rank row, teleport and inbound mass") {
     // strictly directed: a -> b, a -> c; b and c are sinks (outdeg 0)
     val edges = Seq(("a", "b"), ("a", "c")).toDF("src", "dst")

@@ -404,41 +404,22 @@ class PlanAuditSpec extends SparkSuiteBase {
     // assertions pin the fix: (a) constructing the operator launches
     // NO Spark job (the old validation pass was one); (b) the final
     // plan scans the parquet source exactly once.
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(js: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
     import org.apache.spark.sql.functions.col
     val src = Tables(spark, sf, "orders")
       .select(col("o_custkey").as("k"),
         col("o_orderkey").as("s"), (col("o_orderkey") + 5L).as("e"))
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val built = Seq(
-        "peakConcurrency" -> Graft.peakConcurrency(src, "k", "s", "e"),
-        "intervalCoverage" -> Graft.intervalCoverage(src, "k", "s", "e"),
-        "hdrBuckets" -> Graft.hdrBuckets(src, "k", col("e") - col("s") + 1L))
-      // the listener bus is async (and private[spark]) — drain it by
-      // running ONE sentinel job and waiting until the listener has
-      // seen it; the bus is FIFO, so any job the constructions above
-      // launched would have been counted before the sentinel. RDD
-      // count, not DataFrame count: AQE splits a SQL count into one
-      // job per query stage, which would miscount the sentinel.
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      val deadline = System.currentTimeMillis() + 30000
-      while (jobs.get() < 1 && System.currentTimeMillis() < deadline)
-        Thread.sleep(25)
-      assert(jobs.get() == 1,
-        s"operator construction launched ${jobs.get() - 1} job(s) — " +
-          "validation is scanning the input again")
-      for ((name, df) <- built) {
-        val plan = df.queryExecution.executedPlan.toString
-        val scans = "Scan parquet".r.findAllIn(plan).length
-        assert(scans == 1, s"$name plans $scans source scans:\n$plan")
-      }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (built, jobs) = jobGroupsDuring(Seq(
+      "peakConcurrency" -> Graft.peakConcurrency(src, "k", "s", "e"),
+      "intervalCoverage" -> Graft.intervalCoverage(src, "k", "s", "e"),
+      "hdrBuckets" -> Graft.hdrBuckets(src, "k", col("e") - col("s") + 1L)))
+    assert(jobs.isEmpty,
+      s"operator construction launched ${jobs.size} job(s) — " +
+        "validation is scanning the input again")
+    for ((name, df) <- built) {
+      val plan = df.queryExecution.executedPlan.toString
+      val scans = "Scan parquet".r.findAllIn(plan).length
+      assert(scans == 1, s"$name plans $scans source scans:\n$plan")
+    }
   }
 
   test("q96: star-EXCEPT narrows the scan (excluded columns never read)") {

@@ -234,6 +234,91 @@ class RefPipelinesSpec extends SparkSuiteBase {
       "release() must unpersist every parsed source")
   }
 
+  test("accounts whose transactions are all empty: bank_account lands, no transactions table") {
+    // `[]` everywhere infers array<string>: nothing to star-expand, so the
+    // child table is skipped instead of failing the whole route
+    val dir = Files.createTempDirectory("graft-notxn")
+    writeDoc(dir, "E1_bank_scrape.json",
+      """{"name": "Empty One", "complete_datetime": "2020-01-01 00:00:00",
+        |"accounts": [{"account": "ACC11112222", "transactions": []},
+        |             {"account": "ACC33334444", "transactions": []}]}""".stripMargin)
+    writeDoc(dir, "E2_bank_scrape.json",
+      """{"name": "Empty Two", "complete_datetime": "2020-01-02 00:00:00",
+        |"accounts": [{"account": "ACC55556666", "transactions": []}]}""".stripMargin)
+    val routed = Router.routeManaged(spark, dir.toString)
+    try {
+      assert(!routed.tables.contains("transactions"))
+      val out = Files.createTempDirectory("graft-notxn-out").toString
+      val errs = graft.sources.Sinks.fanOut(routed.tables,
+        (t, df) => graft.sources.Sinks.parquetAppend(df, s"$out/$t"))
+      assert(errs.isEmpty, s"sink failures: $errs")
+      val acc = spark.read.parquet(s"$out/bank_account")
+      assert(acc.select("mask_id").collect().map(_.getString(0)).toSet ==
+        Set("XXXX11112222", "XXXX33334444", "XXXX55556666"))
+    } finally routed.release()
+  }
+
+  test("a failing form family unpersists the other families' sources before rethrowing") {
+    val dir = Files.createTempDirectory("graft-failing-family")
+    writeDoc(dir, "F1_bank_scrape.json",
+      """{"name": "F", "accounts": [{"account": "ACC12121212"}]}""")
+    writeDoc(dir, "F1_action.json", """{"action": "x"}""")
+    // two keys equal up to case: the combined family's read fails
+    // (duplicate column) while the bank and action families persist
+    writeDoc(dir, "dup_doc.json", """{"SalesforceID": "A", "salesforceid": "B"}""")
+    spark.sharedState.cacheManager.clearCache()
+    intercept[org.apache.spark.sql.AnalysisException] {
+      Router.routeManaged(spark, dir.toString)
+    }
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "a failed route must not leak the sources it already persisted")
+  }
+
+  test("every job a family read or a sink launches carries the caller's job group") {
+    val dir = Files.createTempDirectory("graft-jobgroup")
+    writeDoc(dir, "G1_bank_scrape.json",
+      """{"name": "G", "accounts": [{"account": "ACC12345678",
+        |"transactions": [{"amount": 1.0}]}]}""".stripMargin)
+    writeDoc(dir, "G1_credit_report.json",
+      """{"MemberCode": "M", "TU_FFR_Report": [{"Trades": [{"trade_id": 1}]}]}""")
+    writeDoc(dir, "G1_action.json", """{"action": "x"}""")
+    writeDoc(dir, "g_doc.json", """{"SalesforceID": "SFG"}""")
+    val out = Files.createTempDirectory("graft-jobgroup-out").toString
+    val sc = spark.sparkContext
+    sc.setJobGroup("route-spec", "route + fanOut", interruptOnCancel = false)
+    val (routed, groups) = try jobGroupsDuring {
+      val r = Router.routeManaged(spark, dir.toString)
+      val errs = graft.sources.Sinks.fanOut(r.tables,
+        (t, df) => graft.sources.Sinks.parquetAppend(df, s"$out/$t"))
+      assert(errs.isEmpty, s"sink failures: $errs")
+      r
+    } finally sc.clearJobGroup()
+    routed.release()
+    // four schema inferences plus one append per table, at the least
+    assert(groups.size >= 4 + routed.tables.size)
+    assert(groups.forall(_ == "route-spec"),
+      s"jobs lost the caller's job group: $groups")
+  }
+
+  test("mixed bank+combined batch: unioned bank_account/transactions keep column order and rows") {
+    // bankpipe's and jsonpipe's outputs union in family order, whichever
+    // family's read finishes first
+    def rows(t: String) = tables(t).collect().map(_.mkString("|")).sorted.toSeq
+    assert(tables("bank_account").columns.toSeq == Seq(
+      "account", "mean_close", "mean_close_30", "mask_id", "SF_ID", "Report_date"))
+    assert(tables("transactions").columns.toSeq == Seq(
+      "amount", "date", "flags", "account_id", "mask_id", "sf_id", "Report_Date"))
+    assert(rows("bank_account") == Seq(
+      "ACC00000001|55.0|null|XXXX00000001|SF001|2019-10-02",
+      "ACC12345678|100.5|90.25|XXXX12345678|ACCT42|2019-10-03 14:30:15",
+      "ACC99999999|7.0|null|XXXX99999999|ACCT42|2019-10-03 14:30:15"))
+    assert(rows("transactions") == Seq(
+      """-3.0|2019-10-02|[]|ACC12345678|XXXX12345678|ACCT42|2019-10-03 14:30:15""",
+      """1.0|2019-10-01|["x"]|ACC99999999|XXXX99999999|ACCT42|2019-10-03 14:30:15""",
+      """5.0|2019-10-01|["a","b"]|ACC12345678|XXXX12345678|ACCT42|2019-10-03 14:30:15""",
+      """9.0|2019-09-30|["f1"]|ACC00000001|XXXX00000001|SF001|2019-10-02"""))
+  }
+
   test("file queue consume-then-archive moves files only on commit (S6)") {
     val in = Files.createTempDirectory("graft-queue")
     val archive = in.resolve("archive")

@@ -46,14 +46,39 @@ class JdbcSinkSpec extends SparkSuiteBase {
 
   test("fanOut isolates a failing table like the reference's try/except (P17)") {
     val good = Seq((1L, "a")).toDF("id", "v")
-    val tables = Map("ok_table" -> good, "bad_table" -> good)
-    val errs = Sinks.fanOut(tables, (name, df) =>
-      if (name == "bad_table") throw new RuntimeException("boom")
-      else Sinks.jdbcAppend(df, url, name, "", ""))
+    val tables = Map("ok_table" -> good, "ok_table2" -> good, "bad_table" -> good)
+    val sc = spark.sparkContext
+    // the sinks run on pool threads: every job they launch must still
+    // carry the CALLER's job group (attributable, cancellable)
+    sc.setJobGroup("fanout-spec", "fanOut isolation", interruptOnCancel = false)
+    val (errs, groups) = try jobGroupsDuring {
+      Sinks.fanOut(tables, (name, df) =>
+        if (name == "bad_table") throw new RuntimeException("boom")
+        else Sinks.jdbcAppend(df, url, name, "", ""))
+    } finally sc.clearJobGroup()
     assert(errs.keySet == Set("bad_table"))
-    val back = spark.read.format("jdbc")
-      .option("url", url).option("dbtable", "ok_table").load()
-    assert(back.count() == 1) // the good table landed despite the bad one
+    assert(groups.nonEmpty && groups.forall(_ == "fanout-spec"),
+      s"sink jobs lost the caller's job group: $groups")
+    for (t <- Seq("ok_table", "ok_table2")) {
+      val back = spark.read.format("jdbc")
+        .option("url", url).option("dbtable", t).load()
+      assert(back.count() == 1) // the good tables landed despite the bad one
+    }
+  }
+
+  test("fanOut rethrows a fatal sink error instead of returning it") {
+    val df = Seq((1L, "a")).toDF("id", "v")
+    val tables = Map("t1" -> df, "t2" -> df, "t3" -> df)
+    val sunk = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val e = intercept[LinkageError] {
+      Sinks.fanOut(tables, (name, _) => {
+        if (name == "t2") throw new LinkageError("fatal sink")
+        if (name == "t3") throw new RuntimeException("tolerated")
+        sunk.add(name); ()
+      })
+    }
+    assert(e.getMessage == "fatal sink") // unwrapped, not an ExecutionException
+    assert(sunk.contains("t1")) // the other sinks still ran to completion
   }
 
   test("q38: the registered roundtrip reads through a 4-slice partitioned JDBC scan") {
