@@ -200,23 +200,13 @@ object Bench {
     // SPARK_GRAFT_BENCH_OUT still wins
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       s"BENCH_LOCAL_c$cpus.json")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // event-time results must not depend on the host timezone (the
-      // events reader casts NTZ data into the session zone) — pin UTC
-      // exactly like Verify/Explain and the test base
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // the generated-class cache defaults to 100 entries; the
-      // registered queries (64 and growing) x several codegen units
-      // each would evict the primed classes before the timed run
-      // reaches them (static conf — must be set before the first
-      // codegen compile in the JVM)
-      .config("spark.sql.codegen.cache.maxEntries", "2000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // the generated-class cache defaults to 100 entries; the
+    // registered queries (64 and growing) x several codegen units each
+    // would evict the primed classes before the timed run reaches them
+    // (static conf — must be set before the first codegen compile in
+    // the JVM)
+    val spark = Session.graft(cpus.toInt,
+      "spark.sql.codegen.cache.maxEntries" -> "2000")
     // Warm the session: executor threads, codegen compiler, operator
     // machinery (first WindowExec/SortExec/joins in a JVM pay one-time
     // class-loading measured at ~3s), and every table's parquet footer —

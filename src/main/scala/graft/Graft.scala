@@ -10,6 +10,22 @@ import org.apache.spark.sql.functions._
   * operators bound to the harness tables). A reference user migrates by
   * pointing [[pipelines.Router.route]] at their document directory and
   * using these for everything the reference never had.
+  *
+  * Every public method here is reached by an oracle-gated registered
+  * query (BindingClaimSpec pins each "`xNN`'s oracle-checked binding"
+  * claim to the query body) except these, which only specs exercise:
+  *  - [[topKPerGroup]]: the plain window spelling that specs hold
+  *    [[topKPerGroupNative]] (the form the queries run) equal to;
+  *  - [[pageRankFrom]]: a wrapper over the warm-start loop q119 runs
+  *    directly, sharing one edge checkpoint between its two rank calls;
+  *  - [[assignToCentroids]]: one projection of the centroid argmax that
+  *    d14 ([[semanticDedupWithCentroids]]) and s07 ([[kmeansFitLong]])
+  *    run under the gate;
+  *  - [[expireSnapshots]]: its sweep runs under d32's
+  *    [[rollbackSnapshot]]; the verb itself only deletes files;
+  *  - [[expireSnapshotsOlderThan]]: its answer depends on file
+  *    modification times, which no fixed oracle input can pin;
+  *  - [[dedupNear]]'s final anti-join: its removal map is d08's binding.
   */
 object Graft {
 
@@ -150,14 +166,18 @@ object Graft {
       plans.TopKPerKeyNode(groupCols.map(attr), order, k, child))
   }
 
-  /** As-of join: for each `left` row, the greatest `rightTs` <= its
-    * `leftTs` within the same `key` — union + single window pass, no
-    * range join (see PERF.md / q16). Emits left rows with a
+  /** As-of join (q16's oracle-checked binding): for each `left` row,
+    * the `valueCol` of the latest `right` row with `rightTs` <= its
+    * `leftTs` within the same `key` — union + single window pass, one
+    * shuffle on the key, no range join (see PERF.md). Right rows sort
+    * before left rows at equal timestamps. Emits left rows with an
     * `asof_<valueCol>` column (null when nothing precedes). */
   def asOfJoin(left: DataFrame, right: DataFrame, key: String,
       leftTs: String, rightTs: String, valueCol: String): DataFrame = {
-    val l = left.withColumn("__kind", lit(1))
-      .withColumn("__ts", col(leftTs))
+    // leftTs travels as the shared sort column itself (renamed back
+    // below), so the shuffle carries no second copy of it
+    val l = left.withColumnRenamed(leftTs, "__ts")
+      .withColumn("__kind", lit(1))
       .withColumn("__v", lit(null).cast(right.schema(valueCol).dataType))
     val r = right.select(col(key), col(rightTs).as("__ts"),
         col(valueCol).as("__v"))
@@ -169,7 +189,8 @@ object Graft {
       .withColumn(s"asof_$valueCol",
         last(when(col("__kind") === 0, col("__v")), ignoreNulls = true).over(w))
       .filter(col("__kind") === 1)
-      .drop("__kind", "__ts", "__v")
+      .drop("__kind", "__v")
+      .withColumnRenamed("__ts", leftTs)
   }
 
   // ---- dedup / similarity / text ----
@@ -218,14 +239,17 @@ object Graft {
     keepFirstPerKey(fresh, col("__h"), idCol).drop("__h")
   }
 
-  /** MinHash-LSH near-duplicate pairs with exact-Jaccard verification.
-    * threshold ~ (1/bands)^(1/rowsPerBand); see ops.TextDedup. */
+  /** MinHash-LSH near-duplicate pairs (id_a < id_b) with exact-Jaccard
+    * verification (d06's oracle-checked binding).
+    * threshold ~ (1/bands)^(1/rowsPerBand); see ops.TextDedup. The
+    * verify join's per-pair groupBy collapses band-duplicated
+    * candidates, so no distinct runs before it. */
   def nearDupPairs(df: DataFrame, textCol: String, idCol: String,
       bands: Int = 16, rowsPerBand: Int = 4, minJaccard: Double = 0.8): DataFrame = {
     val docs = df.select(col(idCol).as("doc_id"), col(textCol).as("text"))
     // single linear pipeline: the verify join consumes the candidate
     // table exactly once, so no persist (and no cache leak) is needed
-    val cand = ops.TextDedup.minhashCandidates(docs, bands, rowsPerBand)
+    val cand = ops.TextDedup.minhashCandidatesRaw(docs, bands, rowsPerBand)
     ops.TextDedup.jaccardVerify(docs, cand).filter(col("jaccard") >= minJaccard)
   }
 
@@ -370,7 +394,8 @@ object Graft {
       .filter(col("rank") <= k)
   }
 
-  /** Whitespace + BPE-ish token counts (see TextAnalysis.t06). */
+  /** Whitespace + BPE-ish token counts (t06's oracle-checked binding):
+    * appends `n_ws_tokens` and `n_bpe_tokens`. */
   def tokenCounts(df: DataFrame, textCol: String): DataFrame =
     df.withColumn("n_ws_tokens",
         size(ops.TextDedup.tokens(col(textCol))).cast("long"))
@@ -381,16 +406,24 @@ object Graft {
   /** Near-duplicate REMOVAL: LSH + exact-jaccard pairs above
     * `minJaccard`, connected components, keep the minimum-id member of
     * each cluster. Returns `df` minus the dropped duplicates — the
-    * operation a training-data pipeline actually applies (see
-    * TextDedup.d08 for the oracle-checked harness binding). */
+    * operation a training-data pipeline actually applies. The dropped
+    * ids are [[nearDupRemovals]]; only the final anti-join is not
+    * under the oracle gate. */
   def dedupNear(df: DataFrame, textCol: String, idCol: String,
-      bands: Int = 8, rowsPerBand: Int = 4, minJaccard: Double = 0.8): DataFrame = {
-    val pairs = nearDupPairs(df, textCol, idCol, bands, rowsPerBand, minJaccard)
-    val dropped = ops.TextDedup.componentMin(pairs)
+      bands: Int = 8, rowsPerBand: Int = 4, minJaccard: Double = 0.8): DataFrame =
+    df.join(nearDupRemovals(df, textCol, idCol, bands, rowsPerBand, minJaccard),
+      Seq(idCol), "left_anti")
+
+  /** [[dedupNear]]'s removal map (d08's oracle-checked binding): one
+    * (`idCol`, kept_id) row per document that [[nearDupPairs]] links,
+    * directly or transitively, to a lower id; kept_id is the minimum
+    * id of its cluster ([[ops.TextDedup.componentMin]]). */
+  private[graft] def nearDupRemovals(df: DataFrame, textCol: String,
+      idCol: String, bands: Int, rowsPerBand: Int, minJaccard: Double): DataFrame =
+    ops.TextDedup.componentMin(
+        nearDupPairs(df, textCol, idCol, bands, rowsPerBand, minJaccard))
       .filter(col("root") < col("id"))
-      .select(col("id").as(idCol))
-    df.join(dropped, Seq(idCol), "left_anti")
-  }
+      .select(col("id").as(idCol), col("root").as("kept_id"))
 
   /** SimHash near-dup pairs over an arbitrary frame (block-LSH +
     * hamming verify; see TextDedup.simhashPairs). */
@@ -399,11 +432,11 @@ object Graft {
     ops.TextDedup.simhashPairs(
       df.select(col(idCol).as("doc_id"), col(textCol).as("text")), maxHamming)
 
-  /** Benchmark contamination: corpus rows sharing >= 1 distinct word
-    * k-gram with the benchmark set, with the shared count. Grams fold
-    * to 8-byte hashes before any exchange; a bounded benchmark
-    * (eval suites) broadcasts via AQE and the corpus streams once.
-    * See TextAnalysis.t09 for the oracle-checked harness binding. */
+  /** Benchmark contamination (t09's oracle-checked binding): corpus
+    * rows sharing >= 1 distinct word k-gram with the benchmark set,
+    * with the shared count. Grams fold to 8-byte hashes before any
+    * exchange; a bounded benchmark (eval suites) broadcasts via AQE and
+    * the corpus streams once. */
   def contamination(corpus: DataFrame, benchmark: DataFrame,
       textCol: String, idCol: String, k: Int = 8): DataFrame = {
     def grams(df: DataFrame, withId: Boolean): DataFrame = {
@@ -418,9 +451,8 @@ object Graft {
       .agg(count(lit(1)).as("n_shared"))
   }
 
-  /** Composed quality filter: keep/drop with a reason code, first
-    * failing rule wins. This IS the implementation the oracle-checked
-    * harness query (TextAnalysis.t12) binds — one expression, no
+  /** Composed quality filter (t12's oracle-checked binding): keep/drop
+    * with a reason code, first failing rule wins — one expression, no
     * drift. Null text is its own reason (`null_text`, dropped): under
     * ANSI null semantics an unguarded when-chain would fall through
     * every null comparison to 'keep'. Appends `reason` and `keep`. */
@@ -439,9 +471,8 @@ object Graft {
     * oversized docs is an upstream op, and consumers needing hard
     * budgets split at read time). Packed independently per shard —
     * packing is inherently sequential, the shard count is the
-    * parallelism (see TextAnalysis.t11, the oracle-checked binding of
-    * this same method). Appends `shard` and `bin`; `tokensCol` must
-    * be a numeric token count. */
+    * parallelism (t11's oracle-checked binding). Appends `shard` and
+    * `bin`; `tokensCol` must be a numeric token count. */
   def packSequences(df: DataFrame, idCol: String, tokensCol: String,
       capacity: Int = 512, shards: Int = 32): DataFrame = {
     val w = Window.partitionBy(col("shard")).orderBy(col(idCol))
@@ -661,9 +692,9 @@ object Graft {
 
   /** THE per-label centroid builder — the ONE copy of the
     * round(4)-before-float pipeline that d11 (via
-    * [[classifyByCentroid]]), s05 ([[ops.Similarity]] delegates
-    * here), and the profiling tool all share; any drift would
-    * silently break oracle parity, so there is exactly one.
+    * [[classifyByCentroid]]) and s05 ([[ops.Similarity]] delegates
+    * here) share; any drift would silently break oracle parity, so
+    * there is exactly one.
     * round(4) BEFORE the float cast: the two engines sum the mean in
     * different orders (~1e-12 slack); rounding first shrinks the
     * float-ulp collision window ~10^3x (s03's note). Returns a
@@ -678,8 +709,9 @@ object Graft {
         .agg(transform(array_sort(collect_list(struct(col("__dim"), col("__c")))),
           x => x.getField("__c")).cast("array<float>").as("__cv")))
 
-  /** Nearest-centroid classification (s05's oracle-checked binding,
-    * sans the harness confusion rollup): appends `predicted` — the
+  /** Nearest-centroid classification, under the oracle gate through
+    * d11's [[semanticDedup]] (s05 scores the same [[labelCentroids]]
+    * in its own one-aggregate plan): appends `predicted` — the
     * `labelCol` of the nearest (by the fused cosine kernel) per-label
     * centroid — and `centroid_cos`. Centroids train from `train` and
     * broadcast; `df` streams once through one argmax aggregate keyed
@@ -2308,7 +2340,16 @@ object Graft {
     * primitive), so each round's relax join plans a bare edge scan;
     * arrivals are NODE-sized, min-folded partially map-side, and
     * sever every 2 rounds. The time filter rides the join, so a
-    * round's shuffle carries transmitting events only. */
+    * round's shuffle carries transmitting events only.
+    *
+    * Failure type: `iters` out of range throws
+    * `IllegalArgumentException` before any job. A null or uncastable
+    * event time is caught in-plan (`raise_error` on the eager event
+    * checkpoint's projection), so the call fails as a Spark execution
+    * exception (`org.apache.spark.SparkRuntimeException`,
+    * USER_RAISED_EXCEPTION, on local mode) with "null or uncastable
+    * event time" in its cause chain — not as
+    * `IllegalArgumentException`. */
   def temporalReach(edges: DataFrame, seeds: DataFrame, startT: Long,
       iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 30, s"iters out of range: $iters")
@@ -2792,11 +2833,17 @@ object Graft {
     *
     * Either way the distance frame is NODE-sized, never edge-sized,
     * the edge list localCheckpoints once and is reused, and the
-    * driver holds nothing. Negative and NULL weights are rejected (an
-    * EAGER validation pass over the checkpointed edge list — one
-    * in-memory scan, paid once per call): with nonnegative weights a
-    * bounded-round result is monotone in `iters` and safe to read as
-    * "distance using <= iters hops". */
+    * driver holds nothing. Negative and NULL weights are rejected: with
+    * nonnegative weights a bounded-round result is monotone in `iters`
+    * and safe to read as "distance using <= iters hops".
+    *
+    * Failure type: `iters` out of range throws
+    * `IllegalArgumentException` before any job. A bad weight is caught
+    * in-plan (`raise_error` on the eager edge checkpoint's projection),
+    * so the call fails as a Spark execution exception
+    * (`org.apache.spark.SparkRuntimeException`, USER_RAISED_EXCEPTION,
+    * on local mode) with "negative or null edge weight" in its cause
+    * chain — not as `IllegalArgumentException`. */
   def shortestPaths(edges: DataFrame, seeds: DataFrame,
       iters: Int, frontier: Boolean = false): DataFrame = {
     require(iters >= 1 && iters <= 30, s"iters out of range: $iters")

@@ -267,31 +267,25 @@ object Relational {
         |ORDER BY n_name""".stripMargin)
   }
 
-  /** q16 — as-of join: for each purchase event, the most recent click at
-    * or before it by the same user. Implemented the scale-right way: tag
-    * both streams, union, ONE shuffle on user_id, and a running
-    * `max(click_ts)` window — no range join, no nested loop. (The
-    * join+groupBy formulation shuffles twice and explodes on skewed
-    * users; the oracle SQL uses it only because it is the obvious
-    * relational spelling.) Timestamps are emitted as epoch micros so the
-    * ns-parquet vs µs-Spark representations hash identically.
+  /** q16 — as-of join ([[graft.Graft.asOfJoin]], which this binds): for
+    * each purchase event, the most recent click at or before it by the
+    * same user. One union, ONE shuffle on user_id and a running window —
+    * no range join, no nested loop. (The join+groupBy formulation
+    * shuffles twice and explodes on skewed users; the oracle SQL uses it
+    * only because it is the obvious relational spelling.) Timestamps are
+    * emitted as epoch micros so the ns-parquet vs µs-Spark
+    * representations hash identically.
     */
   def q16AsOfJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val ev = Tables(s, dir, "events")
-    val tagged = ev.filter($"event_type" === "click")
-      .select($"user_id", $"ts", lit(0).as("kind"), lit(null).cast("long").as("event_id"))
-      .unionByName(
-        ev.filter($"event_type" === "purchase")
-          .select($"user_id", $"ts", lit(1).as("kind"), $"event_id"))
-    // clicks sort before purchases at equal ts => ts <= purchase.ts semantics
-    val w = Window.partitionBy($"user_id").orderBy($"ts", $"kind")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    tagged
-      .withColumn("last_click_us",
-        max(when($"kind" === 0, unix_micros($"ts"))).over(w))
-      .filter($"kind" === 1 && $"last_click_us".isNotNull)
-      .select($"event_id", $"last_click_us")
+    graft.Graft.asOfJoin(
+        ev.filter($"event_type" === "purchase").select($"user_id", $"ts", $"event_id"),
+        ev.filter($"event_type" === "click")
+          .select($"user_id", $"ts", unix_micros($"ts").as("click_us")),
+        "user_id", "ts", "ts", "click_us")
+      .filter($"asof_click_us".isNotNull)
+      .select($"event_id", $"asof_click_us".as("last_click_us"))
       .orderBy($"event_id")
   }
 
@@ -604,25 +598,26 @@ object Relational {
     * densification) that plain window frames cannot spell without
     * IGNORE NULLS.
     *
-    * Scale shape: ONE shuffle on user_id shared by both windows (same
-    * partition key; the full-frame first() needs no extra exchange,
-    * only the sort both windows share). `last(..., ignoreNulls)` over
-    * a running frame is O(1) per row — the masked non-purchase rows
-    * are skipped by the frame evaluator, never re-scanned. Ordering is
-    * (ts, event_id) so equal timestamps cannot flip the carried value
-    * between engines. Values are 2-decimal-quantized, so round(2) is
-    * representation-stable (the st04 note). */
+    * The running value is [[graft.Graft.fillForward]], which this
+    * binds. Scale shape: ONE shuffle on user_id shared by both windows
+    * (same partition key and order; the full-frame first() needs no
+    * extra exchange, only the sort both windows share).
+    * `last(..., ignoreNulls)` over a running frame is O(1) per row — the
+    * masked non-purchase rows are skipped by the frame evaluator, never
+    * re-scanned. Ordering is (ts, event_id) so equal timestamps cannot
+    * flip the carried value between engines. Values are
+    * 2-decimal-quantized, so round(2) is representation-stable (the st04
+    * note). */
   def q29FillGaps(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val purchase = when($"event_type" === "purchase", $"value")
-    val w = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
-    val running = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    Tables(s, dir, "events")
+    val whole = Window.partitionBy($"user_id").orderBy($"ts", $"event_id")
+      .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    val ev = Tables(s, dir, "events")
+      .withColumn("purchase", when($"event_type" === "purchase", $"value"))
+    graft.Graft.fillForward(ev, "user_id", "ts", "event_id", "purchase")
       .select($"event_id", $"user_id", $"event_type",
-        round(last(purchase, ignoreNulls = true).over(running), 2)
-          .as("last_purchase_value"),
-        round(first(purchase, ignoreNulls = true).over(whole), 2)
+        round($"filled_purchase", 2).as("last_purchase_value"),
+        round(first($"purchase", ignoreNulls = true).over(whole), 2)
           .as("first_purchase_value"))
       .orderBy($"event_id")
   }

@@ -114,7 +114,7 @@ object Similarity {
     * the expression-tree hot spot the round-1 bench flagged).
     *
     * Pairing is the same join-free capped-bucket gather as
-    * [[TextDedup.minhashCandidates]]/[[TextDedup.simhashPairs]]: ONE
+    * [[TextDedup.minhashCandidatesRaw]]/[[TextDedup.simhashPairs]]: ONE
     * groupBy(sig) collects each bucket, oversized buckets (> maxBucket
     * members — a degenerate corpus of identical/near-zero embeddings)
     * are dropped before any pair exists, in-bucket pairs unroll via

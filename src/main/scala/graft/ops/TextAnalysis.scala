@@ -96,17 +96,14 @@ object TextAnalysis {
   /** t06 — token counting two ways (builder prompt: "whitespace + a
     * BPE-ish regex"): the whitespace count and a GPT-2-style-lite
     * pretokenizer regex (letter runs / digit runs / punctuation runs,
-    * each with optional leading space) via regexp_extract_all. The
-    * pattern uses only portable constructs so Java regex (Spark) and
-    * RE2 (DuckDB oracle) agree. */
+    * each with optional leading space) via regexp_extract_all — both
+    * from [[graft.Graft.tokenCounts]], which this binds. The pattern
+    * uses only portable constructs so Java regex (Spark) and RE2
+    * (DuckDB oracle) agree. */
   def t06BpeTokens(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pat = " ?[a-z]+| ?[0-9]+| ?[^a-z0-9 ]+"
-    Tables(s, dir, "documents")
-      .select($"doc_id",
-        size(tokens($"text")).cast("long").as("n_ws_tokens"),
-        size(regexp_extract_all(lower($"text"), lit(pat), lit(0)))
-          .cast("long").as("n_bpe_tokens"))
+    graft.Graft.tokenCounts(Tables(s, dir, "documents"), "text")
+      .select($"doc_id", $"n_ws_tokens", $"n_bpe_tokens")
       .orderBy($"doc_id")
   }
 
@@ -270,17 +267,8 @@ object TextAnalysis {
       .orderBy($"doc_id")
   }
 
-  /** t12 — composed quality FILTER (the keep/drop decision a pipeline
-    * actually executes after scoring): first failing rule wins, in a
-    * fixed precedence — too_short (< 10 tokens), too_long (> 1000),
-    * repetitive (duplicate-3-gram fraction > 0.2), else keep. All
-    * comparisons are on exact integer-derived doubles (no rounding
-    * before the threshold), so the DuckDB oracle decides identically
-    * at every boundary. One narrow pass; composition stays inside one
-    * projection — scoring signals are never materialized separately. */
-  /** The shared reason expression behind t12 and
-    * [[graft.Graft.qualityFilter]] — ONE implementation so the
-    * oracle-checked harness binding guards the facade. `null_text`
+  /** The reason expression behind [[graft.Graft.qualityFilter]] (and
+    * the Curation pipelines' keep filter). `null_text`
     * first: under ANSI null semantics every later comparison on a
     * null text is null (not matched) and an unguarded chain would
     * fall through to 'keep' — the opposite of what a quality filter
@@ -299,12 +287,20 @@ object TextAnalysis {
       .otherwise("keep")
   }
 
+  /** t12 — composed quality FILTER (the keep/drop decision a pipeline
+    * actually executes after scoring): first failing rule wins, in a
+    * fixed precedence — too_short (< 10 tokens), too_long (> 1000),
+    * repetitive (duplicate-3-gram fraction > 0.2), else keep. All
+    * comparisons are on exact integer-derived doubles (no rounding
+    * before the threshold), so the DuckDB oracle decides identically
+    * at every boundary. One narrow pass; composition stays inside one
+    * projection — scoring signals are never materialized separately.
+    * The filter is [[graft.Graft.qualityFilter]], which this binds. */
   def t12QualityFilter(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val reason = qualityReason($"text", 10, 1000, 0.2)
-    Tables.spread(Tables(s, dir, "documents"))
+    graft.Graft.qualityFilter(Tables.spread(Tables(s, dir, "documents")), "text")
       .select($"doc_id", size(tokens($"text")).cast("long").as("n_tokens"),
-        reason.as("reason"), (reason === "keep").as("keep"))
+        $"reason", $"keep")
       .orderBy($"doc_id")
   }
 

@@ -219,31 +219,6 @@ object TextDedup {
       .orderBy($"id_a", $"id_b")
   }
 
-  /** Candidate pairs via MinHash-LSH banding. bands x rowsPerBand =
-    * numHashes; collision threshold ~ (1/bands)^(1/rowsPerBand).
-    *
-    * Pairing is join-free: ONE shuffle gathers each (band, bucket)'s
-    * members with `collect_list`, oversized buckets (boilerplate text —
-    * the classic LSH skew hazard; a bucket of m docs yields m^2/2 pairs)
-    * are dropped before any pair exists, then in-bucket pairs unroll via
-    * array HOFs. The earlier self-join spelling needed a persist (the
-    * banded table fed both join sides), a bucket-size window (extra
-    * sort+shuffle), and a sort-merge join — three stages and a cache
-    * leak replaced by one aggregate. At 100 TB the collect_list buffer
-    * is bounded by maxBucket for every bucket that survives; a
-    * degenerate corpus (millions of byte-identical docs) should run
-    * exact dedup (d01) first, which is standard pipeline order. */
-  def minhashCandidates(docs: DataFrame, bands: Int, rowsPerBand: Int,
-      maxBucket: Int = 64): DataFrame =
-    minhashCandidatesRaw(docs, bands, rowsPerBand, maxBucket).distinct()
-
-  /** [[minhashCandidates]] WITHOUT the final distinct: a pair that
-    * collides in k bands appears k times. Every in-repo consumer feeds
-    * [[jaccardVerify]], whose per-pair groupBy collapses multiplicity
-    * anyway — the distinct was a full extra shuffle of the pair table
-    * per query (d02/d06/d08 each paid it) that changed nothing
-    * downstream. Public callers wanting set semantics use
-    * [[minhashCandidates]]. */
   /** The banded LSH signature table: one (doc_id, band, bucket) row
     * per document per band, bucket = xxhash64 over the band's
     * signature rows (+ the band index, so identical row-slices in
@@ -265,6 +240,25 @@ object TextDedup {
       }: _*)).as(Seq("band", "bucket")))
   }
 
+  /** Candidate pairs via MinHash-LSH banding. bands x rowsPerBand =
+    * numHashes; collision threshold ~ (1/bands)^(1/rowsPerBand).
+    *
+    * Pairing is join-free: ONE shuffle gathers each (band, bucket)'s
+    * members with `collect_list`, oversized buckets (boilerplate text —
+    * the classic LSH skew hazard; a bucket of m docs yields m^2/2 pairs)
+    * are dropped before any pair exists, then in-bucket pairs unroll via
+    * array HOFs. The earlier self-join spelling needed a persist (the
+    * banded table fed both join sides), a bucket-size window (extra
+    * sort+shuffle), and a sort-merge join — three stages and a cache
+    * leak replaced by one aggregate. At 100 TB the collect_list buffer
+    * is bounded by maxBucket for every bucket that survives; a
+    * degenerate corpus (millions of byte-identical docs) should run
+    * exact dedup (d01) first, which is standard pipeline order.
+    *
+    * A pair that collides in k bands appears k times: every consumer
+    * feeds [[jaccardVerify]], whose per-pair groupBy collapses the
+    * multiplicity, so a distinct here would be a full extra shuffle of
+    * the pair table that changes nothing downstream. */
   private[graft] def minhashCandidatesRaw(docs: DataFrame, bands: Int,
       rowsPerBand: Int, maxBucket: Int = 64): DataFrame = {
     val banded = bandedSignatures(docs, bands, rowsPerBand)
@@ -292,8 +286,8 @@ object TextDedup {
     * Contract: the output has ONE row per distinct (id_a, id_b) — the
     * groupBy collapses duplicate rows in the input pair table (jaccard
     * is deterministic per pair, so values are unaffected; only
-    * multiplicity is). Internal callers (d02/d06/d08) pass the RAW
-    * band-duplicated candidate table and depend on exactly this
+    * multiplicity is). Internal callers (d02, [[graft.Graft.nearDupPairs]])
+    * pass the RAW band-duplicated candidate table and depend on this
     * collapse; external callers wanting per-occurrence rows should
     * join the result back to their pair table. */
   def jaccardVerify(docs: DataFrame, pairs: DataFrame): DataFrame = {
@@ -345,14 +339,13 @@ object TextDedup {
     * 0.8. The synthetic corpus contains genuinely planted near-dups
     * (25 pairs >= 0.9 at sf0.01, nothing else above 0.3), so this query
     * is oracle-checkable against a DuckDB brute-force all-pairs jaccard
-    * — proving the banded LSH + verify pipeline catches every real
+    * — proving the banded LSH + verify pipeline
+    * ([[graft.Graft.nearDupPairs]], which this binds) catches every real
     * near-duplicate, not merely that it ranks text. */
   def d06NearDupPairs(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = Tables(s, dir, "documents")
-    val pairs = minhashCandidatesRaw(docs, bands = 8, rowsPerBand = 4)
-    jaccardVerify(docs, pairs)
-      .filter($"jaccard" >= 0.8)
+    graft.Graft.nearDupPairs(Tables(s, dir, "documents"), "text", "doc_id",
+        bands = 8, rowsPerBand = 4, minJaccard = 0.8)
       .select($"id_a", $"id_b", round($"jaccard", 4).as("jaccard"))
       .orderBy($"id_a", $"id_b")
   }
@@ -543,17 +536,14 @@ object TextDedup {
 
   /** d08 — near-duplicate REMOVAL (the step a pipeline actually runs):
     * thresholded LSH pairs -> connected components -> every non-minimum
-    * member maps to the kept (minimum-id) document of its cluster.
+    * member maps to the kept (minimum-id) document of its cluster —
+    * [[graft.Graft.dedupNear]]'s removal map, which this binds.
     * Oracle-checked against a DuckDB recursive-CTE transitive closure
     * over the same exact-jaccard pair set. */
   def d08NearDupDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = Tables(s, dir, "documents")
-    val cand = minhashCandidatesRaw(docs, bands = 8, rowsPerBand = 4)
-    val pairs = jaccardVerify(docs, cand).filter($"jaccard" >= 0.8)
-    componentMin(pairs)
-      .filter($"root" < $"id")
-      .select($"id".as("doc_id"), $"root".as("kept_id"))
+    graft.Graft.nearDupRemovals(Tables(s, dir, "documents"), "text", "doc_id",
+        bands = 8, rowsPerBand = 4, minJaccard = 0.8)
       .orderBy($"doc_id")
   }
 
@@ -571,9 +561,8 @@ object TextDedup {
     * downstream keep/collapse/aggregate steps join on. */
   def d18ComponentsDistributed(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val docs = Tables(s, dir, "documents")
-    val cand = minhashCandidatesRaw(docs, bands = 8, rowsPerBand = 4)
-    val pairs = jaccardVerify(docs, cand).filter($"jaccard" >= 0.8)
+    val pairs = graft.Graft.nearDupPairs(Tables(s, dir, "documents"),
+      "text", "doc_id", bands = 8, rowsPerBand = 4, minJaccard = 0.8)
     componentMin(pairs, localEdgeGate = 0L)
       .select($"id".as("doc_id"), $"root".as("component_id"))
       .orderBy($"doc_id")
@@ -737,9 +726,8 @@ object TextDedup {
   def d20KeepBest(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables(s, dir, "documents")
-    val cand = minhashCandidatesRaw(docs, bands = 8, rowsPerBand = 4)
-    val pairs = jaccardVerify(docs, cand).filter($"jaccard" >= 0.8)
-    val labels = componentMin(pairs)
+    val labels = componentMin(graft.Graft.nearDupPairs(docs, "text", "doc_id",
+        bands = 8, rowsPerBand = 4, minJaccard = 0.8))
       .select($"id".as("doc_id"), $"root")
     val best = labels
       .join(docs.select($"doc_id", $"n_chars"), "doc_id")
@@ -795,7 +783,7 @@ object TextDedup {
 
   /** SimHash near-dup pairs: block-LSH (4 x 16-bit blocks) then hamming
     * distance <= maxHamming via bit_count(xor). Same join-free
-    * collect_list pairing as [[minhashCandidates]] — the earlier
+    * collect_list pairing as [[minhashCandidatesRaw]] — the earlier
     * self-join referenced the fingerprint table twice, recomputing the
     * (expensive) simhash per side; here each fingerprint is computed
     * exactly once and buckets are capped before any pair exists. */
@@ -902,8 +890,9 @@ object TextDedup {
     * between the pipeline's own splits (the t08 hash-split assignment,
     * mirrored exactly).
     *
-    * Scale shape: chunks fold to xxhash64 longs in the projection (the
-    * d09/t07 discipline — no chunk string ever shuffles); each side
+    * The audit is [[graft.Graft.splitLeakage]], which this binds. Scale
+    * shape: chunks fold to xxhash64 longs in the projection (the
+    * d09/t07 discipline — no chunk string ever shuffles); the test side
     * reduces to DISTINCT (doc, hash) pairs before the join; the train
     * side collapses to a distinct hash set, small relative to the
     * corpus, and AQE broadcasts it at harness scale (at 100 TB it is a
@@ -912,20 +901,10 @@ object TextDedup {
     * lists offenders can't prove cleanliness). */
   def d12CrossSplitLeakage(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
+    val docs = Tables.spread(Tables(s, dir, "documents"))
     val bucket = TextAnalysis.hashSplitBucket($"doc_id")
-    val chunked = Tables.spread(Tables(s, dir, "documents"))
-      .filter($"text".isNotNull)
-      .select($"doc_id", bucket.as("bucket"),
-        explode(tokenChunks($"text", 20)).as("chunk"))
-      .select($"doc_id", $"bucket", xxhash64($"chunk").as("h"))
-      .distinct()
-    val trainH = chunked.filter($"bucket" < 52429)
-      .select($"h".as("th")).distinct()
-    chunked.filter($"bucket" >= 58982)
-      .join(trainH, $"h" === $"th", "left")
-      .groupBy($"doc_id")
-      .agg(count(lit(1)).as("n_chunks"),
-        sum(when($"th".isNotNull, 1L).otherwise(0L)).as("n_leaked"))
+    graft.Graft.splitLeakage(docs.filter(bucket >= 58982),
+        docs.filter(bucket < 52429), "doc_id", "text", 20)
       .orderBy($"doc_id")
   }
 
@@ -974,7 +953,7 @@ object TextDedup {
     * over every shared shingle.
     *
     * Scale shape: the inverted-index gather is the capped-bucket
-    * pattern ([[minhashCandidates]]) with the cap implied by the df
+    * pattern ([[minhashCandidatesRaw]]) with the cap implied by the df
     * bound — a posting list of at most 10 docs yields at most 45
     * pairs, and df is a groupBy aggregate the weight table needs
     * anyway. The rerank joins the bounded pair set against the per-doc

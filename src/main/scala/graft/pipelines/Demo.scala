@@ -1,7 +1,5 @@
 package graft.pipelines
 
-import org.apache.spark.sql.SparkSession
-
 /** CLI demo of the reference-pipeline surface: route a directory of
   * JSON form documents and print every output table with its row count —
   * what the reference's `__main__` loop does minus the SQL Server
@@ -10,13 +8,8 @@ import org.apache.spark.sql.SparkSession
 object Demo {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.graft(4,
+      sys.env.get("SPARK_MASTER").map("spark.master" -> _).toSeq: _*)
     val tables = Router.route(spark, dir)
     tables.toSeq.sortBy(_._1).foreach { case (name, df) =>
       println(f"$name%-28s rows=${df.count()}%-6d cols=${df.columns.length}")

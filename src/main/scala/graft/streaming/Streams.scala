@@ -382,9 +382,9 @@ object Streams {
 
   private val replayRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** The shared MemoryStream replay harness behind st03/st05–st08 (and
-    * tools.StProfile's probe variants): feed a driver-collected,
-    * deterministically ordered slice through a real streaming query in
+  /** The shared MemoryStream replay harness behind st03/st05–st08:
+    * feed a driver-collected, deterministically ordered slice through
+    * a real streaming query in
     * `nChunks` micro-batches (`processAllAvailable` per chunk forces a
     * real trigger each — cross-trigger state survival is the property
     * under test) and return the memory sink's final table.
@@ -394,8 +394,8 @@ object Streams {
     *   partitions sized to the state: the state store commits one
     *   delta file per partition per trigger and each micro-batch
     *   schedules shuffle-partition-many tasks, so 32 partitions for
-    *   ~3k keys paid ~2x the trigger latency of 4 (measured in
-    *   tools.StProfile). The caller's session is not touched.
+    *   ~3k keys paid ~2x the trigger latency of 4 (measured; PERF.md
+    *   perf lesson 9). The caller's session is not touched.
     * - No-data micro-batches DISABLED by default: most registered
     *   shapes are output-neutral without them — each query's scaladoc
     *   carries its own argument why (complete-mode re-emit,
@@ -491,8 +491,8 @@ object Streams {
     * join emits each matched pair in the data batch where the later
     * side arrives — watermark-only batches perform state EVICTION,
     * never emission — and they cost a full trigger each (~0.6 s, half
-    * the query's wall time; measured in tools/StProfile: 4 batches /
-    * 17 rows with them, 2 batches / 17 rows without). */
+    * the query's wall time; PERF.md round 7: 4 batches / 17 rows with
+    * them, 2 batches / 17 rows without). */
   def st05StreamingJoin(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val data = Tables(s, dir, "events")

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import graft.SparkEntry
 
 /** Dev CLI: print the formatted physical plan and wall time of one
@@ -18,15 +17,7 @@ object Explain {
     }
     val name = args(0)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.graft(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val df = SparkEntry.queries.getOrElse(name, {
       System.err.println(s"unknown query '$name'; available:\n  " +
         SparkEntry.queries.keys.toSeq.sorted.mkString("\n  "))

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 import graft.SparkEntry
 import java.nio.file.{Files, Paths}
@@ -30,18 +29,10 @@ object ExplainAll {
     val outDir = Paths.get(args(0))
     Files.createDirectories(outDir)
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val names = args.lift(2)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.graft(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     val mode = ExplainMode.fromString("formatted")
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

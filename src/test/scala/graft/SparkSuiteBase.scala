@@ -45,17 +45,6 @@ trait SparkSuiteBase extends AnyFunSuite {
 }
 
 object SparkSuiteBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session.graft(4, "spark.sql.warehouse.dir" ->
+    java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
 }

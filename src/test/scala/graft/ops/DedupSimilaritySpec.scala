@@ -85,7 +85,7 @@ class DedupSimilaritySpec extends SparkSuiteBase {
   }
 
   test("minhash LSH finds exact and near duplicates, not unrelated docs") {
-    val cand = TextDedup.minhashCandidates(docs, bands = 16, rowsPerBand = 4)
+    val cand = TextDedup.minhashCandidatesRaw(docs, bands = 16, rowsPerBand = 4)
     val verified = TextDedup.jaccardVerify(docs, cand)
       .filter($"jaccard" >= 0.5)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
@@ -112,7 +112,7 @@ class DedupSimilaritySpec extends SparkSuiteBase {
     val sf = "/root/testdata/sf0.001"
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     // candidate generation: collect_list pairing — no join, no window
-    val candPlan = TextDedup.minhashCandidates(docs, 8, 4)
+    val candPlan = TextDedup.minhashCandidatesRaw(docs, 8, 4)
       .queryExecution.executedPlan.toString
     assert(!candPlan.contains("Join"), s"candidates plan has a join:\n$candPlan")
     assert(!candPlan.contains("Window"), s"candidates plan has a window:\n$candPlan")
@@ -144,6 +144,43 @@ class DedupSimilaritySpec extends SparkSuiteBase {
     assert(scans == 2 && prunedScans == 2,
       s"expected 2 documents scans, both pruned to doc_id+text " +
         s"(got $scans scans, $prunedScans pruned):\n$d06Plan")
+  }
+
+  test("nearDupPairs: no aggregate over the candidate pairs before the verify join") {
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val plan = graft.Graft.nearDupPairs(docs, "text", "doc_id")
+      .queryExecution.sparkPlan
+    val joins = plan.collect { case j: BaseJoinExec => j }
+    assert(joins.size == 1, s"expected the one verify join:\n$plan")
+    // jaccardVerify's per-pair groupBy collapses band-duplicated
+    // candidates above the join; a distinct below it is a wasted shuffle
+    val pairAggs = joins.head.collect {
+      case a: BaseAggregateExec
+          if Set("id_a", "id_b").subsetOf(a.output.map(_.name).toSet) => a
+    }
+    assert(pairAggs.isEmpty, s"candidate pairs aggregated before verify:\n$plan")
+  }
+
+  test("dedupNear keeps exactly the documents d08 does not drop") {
+    val base = (1 to 40).map(i => s"w$i").mkString(" ")
+    val dir = java.nio.file.Files.createTempDirectory("graft-dedupnear").toString
+    Seq(1L -> base,
+        2L -> s"$base tail",                   // near-dup of 1
+        3L -> s"lead $base tail",              // near-dup of 2, chains to 1
+        10L -> base.replace("w1 ", "x1 "),     // near-dup of 1
+        20L -> (1 to 40).map(i => s"v$i").mkString(" "),
+        21L -> (1 to 40).map(i => s"v$i").mkString(" ").replace("v40", "u40"),
+        30L -> "unrelated short document")
+      .toDF("doc_id", "text")
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    val all = spark.read.parquet(s"$dir/documents.parquet")
+    val dropped = TextDedup.d08NearDupDedup(spark, dir)
+      .select($"doc_id").as[Long].collect().toSet
+    assert(dropped == Set(2L, 3L, 10L, 21L), s"planted clusters: dropped $dropped")
+    val kept = graft.Graft.dedupNear(all, "text", "doc_id")
+      .select($"doc_id").as[Long].collect().toSet
+    assert(kept == all.select($"doc_id").as[Long].collect().toSet -- dropped)
   }
 
   test("shingles: includes the last shingle and is empty/safe for short or empty docs") {
