@@ -20,6 +20,10 @@ import org.apache.spark.sql.graftshim.ThreadLocalBridge
   *   - every unit runs under the caller's thread-locals (job group,
   *     active session, SQL properties) via [[ThreadLocalBridge]], so
   *     its jobs stay attributable and cancellable as the caller's;
+  *   - every unit's jobs carry the description `graft <label>`, after
+  *     the caller's own description when it has one. The unit sets it
+  *     on its thread's clone of the caller's properties, so the
+  *     caller's description is untouched;
   *   - outcomes come back in INPUT order, whatever order units finish;
   *   - every unit finishes before this returns; NonFatal failures are
   *     returned in their slot, a fatal one (OOM, LinkageError) is
@@ -34,12 +38,21 @@ object DriverPool {
     t
   }
 
-  def runAll[T](spark: SparkSession, width: Int, units: Seq[() => T]): Seq[Try[T]] =
+  def runAll[T](spark: SparkSession, width: Int, units: Seq[(String, () => T)])
+      : Seq[Try[T]] =
     if (units.isEmpty) Nil
     else {
       val pool = Executors.newFixedThreadPool(width.max(1).min(units.size), daemons)
       try {
-        val futures = units.map(u => ThreadLocalBridge.captured(spark, pool)(u()))
+        val futures = units.map { case (label, u) =>
+          ThreadLocalBridge.captured(spark, pool) {
+            val sc = spark.sparkContext
+            val tag = s"graft $label"
+            sc.setJobDescription(Option(sc.getLocalProperty("spark.job.description"))
+              .fold(tag)(caller => s"$caller: $tag"))
+            u()
+          }
+        }
         val outcomes = futures.map { f =>
           try Success(f.get())
           catch { case e: ExecutionException => Failure(e.getCause) }

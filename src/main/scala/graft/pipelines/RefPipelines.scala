@@ -25,7 +25,11 @@ import org.apache.spark.sql.types._
   * distributed read per form family. [[Router.route]] persists each
   * family's parsed source itself (the pandas `data_dict` reuse, done
   * distributed) and reads the families concurrently; release the
-  * sources with [[Router.routeManaged]].
+  * sources with [[Router.routeManaged]]. Each source is sized to its
+  * bytes, ceil(bytes / `spark.sql.files.maxPartitionBytes`) partitions
+  * and never more than Spark's own split, so a small batch writes one
+  * file per table and a large one reads about `maxPartitionBytes` of
+  * JSON per task.
   *
   * Reference bugs intentionally NOT replicated (SURVEY.md §2a):
   * P8 vectorized row-slice mask (`P:94`), the `reg_items` path bug
@@ -148,31 +152,49 @@ object Router {
     * from. Each non-empty form family's read -> infer -> persist ->
     * pipeline build is one independent unit, and the (at most four)
     * units run concurrently ([[graft.internal.DriverPool]], one thread
-    * per family): each unit is one schema-inference job plus
-    * driver-side plan building, so run serially the executors idle
-    * through most of the route. If any unit fails, the sources the
-    * others persisted are unpersisted before the failure is rethrown
-    * — a failed route leaks no cache. */
+    * per family, jobs described as `graft route <pipeline>`): each unit
+    * is one schema-inference job plus driver-side plan building, so run
+    * serially the executors idle through most of the route. If any unit
+    * fails, the sources the others persisted are unpersisted before the
+    * failure is rethrown — a failed route leaks no cache.
+    *
+    * Size-aware source partitioning: each family's source is coalesced,
+    * before it is persisted, to ceil(bytes / maxPartitionBytes)
+    * partitions with a floor of one. The bytes are the lengths of the
+    * family's files from the directory listing (no second listing);
+    * the divisor is the session's `spark.sql.files.maxPartitionBytes`.
+    * `coalesce` never raises the count, so Spark's own split count is
+    * the ceiling. Spark's split pads every file with `openCostInBytes`
+    * (4 MB) and spreads even a few kilobytes `defaultParallelism` ways;
+    * a small batch therefore pays a task and a cached block per file,
+    * and every table built from it a task and an output file per
+    * partition. Sized, a small family is one partition, and each table
+    * — the unioned bank_account/transactions too — is one task and one
+    * file. At scale every partition still holds about
+    * `maxPartitionBytes` of JSON, the size Spark itself aims for. */
   private def routeImpl(spark: SparkSession, dir: String)
       : (Map[String, DataFrame], Seq[DataFrame]) = {
-    import org.apache.hadoop.fs.{FileSystem, Path}
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
     val fs = FileSystem.get(java.net.URI.create(dir),
       spark.sparkContext.hadoopConfiguration)
-    val files = fs.listStatus(new Path(dir)).filter(_.isFile)
-      .map(_.getPath.toString).filter(_.endsWith(".json")).toSeq
+    val files = fs.listStatus(new Path(dir))
+      .filter(f => f.isFile && f.getPath.getName.endsWith(".json")).toSeq
+    val maxBytes = spark.sessionState.conf.filesMaxPartitionBytes
     // persist: each pipeline derives many tables from one parsed source
     // (and Demo counts + writes each) — without caching, every action
     // re-lists, re-infers, and re-parses the JSON (the pandas
     // `data_dict` reuse of SURVEY §4, done distributed).
-    def build(paths: Seq[String], pipe: DataFrame => Map[String, DataFrame])
+    def build(family: Seq[FileStatus], pipe: DataFrame => Map[String, DataFrame])
         : Option[(DataFrame, Map[String, DataFrame])] = {
-      val df = parseClean(spark, paths)
+      val df = parseClean(spark, family.map(_.getPath.toString))
       // all-corrupt batch: nothing parseable survives -> no data columns
       // beyond provenance -> the whole form family is skipped, exactly
       // like the reference when every file of a kind throws (P17)
       if (df.columns.forall(_ == "source_file")) None
       else {
-        val p = df.persist()
+        val bytes = family.map(_.getLen).sum
+        val target = ((bytes + maxBytes - 1) / maxBytes).max(1L).min(Int.MaxValue.toLong)
+        val p = df.coalesce(target.toInt).persist()
         try Some(p -> pipe(p))
         catch { case scala.util.control.NonFatal(e) => p.unpersist(); throw e }
       }
@@ -181,16 +203,16 @@ object Router {
     // re.search('_bank_scrape', name) (`P:798`), so `SF1_bank_scrape_v2
     // .json` still goes to bankpipe. Precedence bank > credit > action
     // mirrors the reference's if/elif chain.
-    def base(p: String) = p.substring(p.lastIndexOf('/') + 1)
-    val (bank, r1) = files.partition(p => base(p).contains("_bank_scrape"))
-    val (credit, r2) = r1.partition(p => base(p).contains("_credit_report"))
-    val (action, rest) = r2.partition(p => base(p).contains("_action"))
-    val families = Seq[(Seq[String], DataFrame => Map[String, DataFrame])](
-      action -> RefPipelines.recpipe, bank -> RefPipelines.bankpipe,
-      credit -> RefPipelines.creditpipe, rest -> RefPipelines.jsonpipe)
-      .filter(_._1.nonEmpty)
+    def marked(marker: String)(f: FileStatus) = f.getPath.getName.contains(marker)
+    val (bank, r1) = files.partition(marked("_bank_scrape"))
+    val (credit, r2) = r1.partition(marked("_credit_report"))
+    val (action, rest) = r2.partition(marked("_action"))
+    val families = Seq[(String, Seq[FileStatus], DataFrame => Map[String, DataFrame])](
+      ("recpipe", action, RefPipelines.recpipe), ("bankpipe", bank, RefPipelines.bankpipe),
+      ("creditpipe", credit, RefPipelines.creditpipe), ("jsonpipe", rest, RefPipelines.jsonpipe))
+      .filter(_._2.nonEmpty)
     val outcomes = graft.internal.DriverPool.runAll(spark, families.size,
-      families.map { case (paths, pipe) => () => build(paths, pipe) })
+      families.map { case (name, fam, pipe) => s"route $name" -> (() => build(fam, pipe)) })
     val built = outcomes.flatMap(_.toOption).flatten
     outcomes.collectFirst { case scala.util.Failure(e) =>
       built.foreach(_._1.unpersist())

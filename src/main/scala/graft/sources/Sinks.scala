@@ -77,19 +77,27 @@ object Sinks {
     * called from several threads at once, always for DISTINCT table
     * names, and must be thread-safe (the JDBC and parquet appends here
     * are: each writes its own table/path). Every call runs under the
-    * caller's job group and session. NonFatal failures are isolated per
-    * table; a fatal one (OOM, LinkageError) is rethrown, not returned
-    * as one more tolerated failure. Width is min(tables, max(2,
-    * defaultParallelism)) — derived, with no config option. */
+    * caller's job group and session, and its jobs are described as
+    * `graft append <table>`. NonFatal failures are isolated per table;
+    * a fatal one (OOM, LinkageError) is rethrown, not returned as one
+    * more tolerated failure.
+    *
+    * Width is min(tables, 2 × defaultParallelism) — derived, with no
+    * config option. A small table's append is one short task wrapped
+    * in driver-side planning and commit of about the same length, so
+    * with only `defaultParallelism` appends in flight the slots idle
+    * while each append plans and commits; twice as many keep a task
+    * queued for every slot. The width follows the cluster, not the
+    * size of the caller's map. */
   def fanOut(tables: Map[String, DataFrame], sink: (String, DataFrame) => Unit)
       : Map[String, Throwable] =
     if (tables.isEmpty) Map.empty
     else {
       val spark = tables.head._2.sparkSession
-      val width = math.max(2, spark.sparkContext.defaultParallelism)
+      val width = 2 * spark.sparkContext.defaultParallelism
       val named = tables.toSeq
       val outcomes = graft.internal.DriverPool.runAll(spark, width,
-        named.map { case (name, df) => () => sink(name, df) })
+        named.map { case (name, df) => s"append $name" -> (() => sink(name, df)) })
       named.zip(outcomes).collect {
         case ((name, _), scala.util.Failure(e)) => name -> e
       }.toMap

@@ -13,22 +13,32 @@ trait SparkSuiteBase extends AnyFunSuite {
 
   /** `body`'s result, plus the `spark.jobGroup.id` of every Spark job it
     * starts, from any thread, in start order ("" for a job without a
-    * group). The listener bus is async (and private[spark]), so a
-    * sentinel job marks the end: the bus is FIFO, so every job `body`
+    * group). */
+  def jobGroupsDuring[T](body: => T): (T, Seq[String]) = {
+    val (result, tags) = jobTagsDuring(body)
+    (result, tags.map(_._1))
+  }
+
+  /** [[jobGroupsDuring]] with each job's `spark.job.description` beside
+    * its group: (group, description), "" for an absent one. The
+    * listener bus is async (and private[spark]), so a sentinel job
+    * marks the end: the bus is FIFO, so every job `body`
     * launched has been seen once the sentinel has. RDD count, not
     * DataFrame count: AQE splits a SQL count into one job per query
     * stage. */
-  def jobGroupsDuring[T](body: => T): (T, Seq[String]) = {
+  def jobTagsDuring[T](body: => T): (T, Seq[(String, String)]) = {
     val sc = spark.sparkContext
     val sentinelKey = "graft.test.sentinel"
-    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val tags = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
     val sentinelSeen = new java.util.concurrent.CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(js: SparkListenerJobStart): Unit = {
         val props = Option(js.properties)
         if (props.exists(_.getProperty(sentinelKey) != null)) sentinelSeen.countDown()
-        else groups.add(props.flatMap(p =>
-          Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+        else {
+          def prop(key: String) = props.flatMap(p => Option(p.getProperty(key))).getOrElse("")
+          tags.add(prop("spark.jobGroup.id") -> prop("spark.job.description"))
+        }
       }
     }
     sc.addSparkListener(listener)
@@ -39,7 +49,7 @@ trait SparkSuiteBase extends AnyFunSuite {
       finally sc.setLocalProperty(sentinelKey, null)
       assert(sentinelSeen.await(30, java.util.concurrent.TimeUnit.SECONDS),
         "listener bus never delivered the sentinel job")
-      (result, groups.asScala.toSeq)
+      (result, tags.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
   }
 }

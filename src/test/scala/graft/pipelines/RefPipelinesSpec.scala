@@ -286,18 +286,77 @@ class RefPipelinesSpec extends SparkSuiteBase {
     val out = Files.createTempDirectory("graft-jobgroup-out").toString
     val sc = spark.sparkContext
     sc.setJobGroup("route-spec", "route + fanOut", interruptOnCancel = false)
-    val (routed, groups) = try jobGroupsDuring {
+    val (routed, tags) = try jobTagsDuring {
       val r = Router.routeManaged(spark, dir.toString)
       val errs = graft.sources.Sinks.fanOut(r.tables,
         (t, df) => graft.sources.Sinks.parquetAppend(df, s"$out/$t"))
       assert(errs.isEmpty, s"sink failures: $errs")
+      // the pool threads described their jobs on clones of the caller's
+      // properties: the caller's own description is untouched
+      assert(sc.getLocalProperty("spark.job.description") == "route + fanOut")
       r
     } finally sc.clearJobGroup()
     routed.release()
+    val (groups, descriptions) = tags.unzip
     // four schema inferences plus one append per table, at the least
     assert(groups.size >= 4 + routed.tables.size)
     assert(groups.forall(_ == "route-spec"),
       s"jobs lost the caller's job group: $groups")
+    // every job names its unit after the caller's description, and
+    // every table's append is named
+    assert(descriptions.forall(_.startsWith("route + fanOut: graft ")), descriptions)
+    for (t <- routed.tables.keys)
+      assert(descriptions.contains(s"route + fanOut: graft append $t"),
+        s"no job described as the append of $t: $descriptions")
+    for (p <- Seq("recpipe", "bankpipe", "creditpipe", "jsonpipe"))
+      assert(descriptions.contains(s"route + fanOut: graft route $p"), descriptions)
+  }
+
+  test("small batch: every routed table is one partition, and fanOut writes one file per table") {
+    // the bank and combined families each hold two files, which Spark
+    // alone would read as two partitions apiece
+    val multi = tables.collect { case (t, df) if df.rdd.getNumPartitions != 1 =>
+      t -> df.rdd.getNumPartitions }
+    assert(multi.isEmpty, s"tables of more than one partition: $multi")
+    val out = Files.createTempDirectory("graft-onefile-out")
+    val errs = graft.sources.Sinks.fanOut(tables,
+      (t, df) => graft.sources.Sinks.parquetAppend(df, s"$out/$t"))
+    assert(errs.isEmpty, s"sink failures: $errs")
+    for (t <- tables.keys) {
+      val files = new java.io.File(s"$out/$t").listFiles.count(_.getName.endsWith(".parquet"))
+      assert(files == 1, s"$t: $files parquet files")
+    }
+  }
+
+  test("family source: ceil(bytes / maxPartitionBytes) partitions, never more than Spark's split") {
+    // one family only (recpipe): its one table has the source's partitions
+    val dir = Files.createTempDirectory("graft-sized")
+    for (i <- 1 to 8) writeDoc(dir, f"S$i%02d_action.json",
+      s"""{"action": "a$i", "priority": "p${i % 3}", "pad": "${"x" * (100 * i)}"}""")
+    val bytes = dir.toFile.listFiles.map(_.length).sum
+    def routed(): (Int, Seq[String]) = {
+      val r = Router.routeManaged(spark, dir.toString)
+      try {
+        val t = r.tables("reccomendation_action")
+        (t.rdd.getNumPartitions, t.collect().map(_.mkString("|")).sorted.toSeq)
+      } finally r.release()
+    }
+    val (defaultParts, want) = routed()
+    assert(defaultParts == 1 && want.size == 8)
+    val key = "spark.sql.files.maxPartitionBytes"
+    val prior = spark.conf.getAll.get(key)
+    try {
+      for (target <- Seq(bytes / 3 + 1, 1L)) {
+        spark.conf.set(key, target)
+        val sparkSplit = spark.read.option("multiLine", "true").json(dir.toString)
+          .rdd.getNumPartitions
+        assert(sparkSplit == 8) // one unsplittable document per partition
+        val (parts, rows) = routed()
+        assert(parts == math.min((bytes + target - 1) / target, sparkSplit.toLong),
+          s"target $target: $parts partitions")
+        assert(rows == want)
+      }
+    } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("mixed bank+combined batch: unioned bank_account/transactions keep column order and rows") {

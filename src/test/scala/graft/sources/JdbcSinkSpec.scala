@@ -81,6 +81,25 @@ class JdbcSinkSpec extends SparkSuiteBase {
     assert(sunk.contains("t1")) // the other sinks still ran to completion
   }
 
+  test("fanOut keeps 2 x defaultParallelism appends in flight") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    val width = 2 * spark.sparkContext.defaultParallelism
+    val df = Seq((1L, "a")).toDF("id", "v")
+    val tables = (1 to width).map(i => s"inflight_$i" -> df).toMap
+    val allIn = new CountDownLatch(width)
+    val landed = new ConcurrentLinkedQueue[String]
+    // each sink finishes only once every sink has started: a narrower
+    // pool leaves the latch short and its sinks time out
+    val errs = Sinks.fanOut(tables, (name, _) => {
+      allIn.countDown()
+      if (!allIn.await(20, TimeUnit.SECONDS))
+        throw new IllegalStateException(s"$name: fewer than $width appends in flight")
+      landed.add(name); ()
+    })
+    assert(errs.isEmpty, s"sink failures: $errs")
+    assert(landed.toArray.toSet == tables.keySet)
+  }
+
   test("q38: the registered roundtrip reads through a 4-slice partitioned JDBC scan") {
     val df = graft.ops.Layout.q38JdbcRoundtrip(spark, "/root/testdata/sf0.001")
     val plan = df.queryExecution.executedPlan.toString
