@@ -46,12 +46,13 @@ object FileQueue {
       .withColumn("source_file", input_file_name())
 
   /** Schema bootstrap for [[stream]] — one batch pass over (a sample
-    * of) the existing files. DROPMALFORMED keeps a corrupt sample file
-    * from polluting the inferred schema with a corrupt-record column
-    * that every downstream sink row would then carry. */
+    * of) the existing files, the Router's inference
+    * ([[graft.pipelines.Router.infer]]). DROPMALFORMED keeps a corrupt
+    * sample file from polluting the inferred schema with a
+    * corrupt-record column that every downstream sink row would then
+    * carry. */
   def inferSchema(spark: SparkSession, dir: String): StructType =
-    spark.read.option("multiLine", "true").option("mode", "DROPMALFORMED")
-      .json(dir).schema
+    graft.pipelines.Router.infer(spark, Seq(dir))
 
   /** Batch consume-then-archive for backfills: returns the parsed docs;
     * call the returned `commit()` AFTER all downstream sinks succeed to
@@ -65,15 +66,11 @@ object FileQueue {
       spark.sparkContext.hadoopConfiguration)
     val files = fs.listStatus(new Path(inDir)).filter(_.isFile)
       .map(_.getPath).filter(_.getName.endsWith(".json"))
-    // drained queue (steady state): empty frame, no-op commit — a
-    // zero-path json() read would throw UNABLE_TO_INFER_SCHEMA
+    // drained queue (steady state): empty frame, no-op commit, no job —
+    // with no file there is no schema to infer
     if (files.isEmpty) return (spark.emptyDataFrame, () => ())
-    // corrupt docs dropped per-doc at the source, same contract as
-    // stream()/Router (see parseClean's rationale)
-    val df = spark.read.option("multiLine", "true")
-      .option("mode", "DROPMALFORMED")
-      .json(files.map(_.toString).toIndexedSeq: _*)
-      .withColumn("source_file", input_file_name())
+    // corrupt docs dropped per-doc at the source: the Router's reader
+    val df = graft.pipelines.Router.read(spark, files.map(_.toString).toIndexedSeq)
     val commit = () => {
       fs.mkdirs(new Path(archiveDir))
       // Hadoop rename signals failure by BOOLEAN (dest exists,

@@ -298,8 +298,8 @@ class RefPipelinesSpec extends SparkSuiteBase {
     } finally sc.clearJobGroup()
     routed.release()
     val (groups, descriptions) = tags.unzip
-    // four schema inferences plus one append per table, at the least
-    assert(groups.size >= 4 + routed.tables.size)
+    // four schema inferences plus one append per table
+    assert(groups.size == 4 + routed.tables.size, descriptions)
     assert(groups.forall(_ == "route-spec"),
       s"jobs lost the caller's job group: $groups")
     // every job names its unit after the caller's description, and
@@ -376,6 +376,61 @@ class RefPipelinesSpec extends SparkSuiteBase {
       """1.0|2019-10-01|["x"]|ACC99999999|XXXX99999999|ACCT42|2019-10-03 14:30:15""",
       """5.0|2019-10-01|["a","b"]|ACC12345678|XXXX12345678|ACCT42|2019-10-03 14:30:15""",
       """9.0|2019-09-30|["f1"]|ACC00000001|XXXX00000001|SF001|2019-10-02"""))
+  }
+
+  test("Router.read: the schema and rows of a multiLine read, case by case") {
+    def dirOf(files: (String, Array[Byte])*): String = {
+      val dir = Files.createTempDirectory("graft-read-eq")
+      for ((name, bytes) <- files) Files.write(dir.resolve(name), bytes)
+      dir.toString
+    }
+    def utf8(s: String) = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val good = "good.json" -> utf8("""{"id": 1, "tags": ["a"], "nested": {"x": 1.5}}""")
+    val cases = Seq(
+      "fixture directory" -> fixtureDir,
+      "truncated doc" -> dirOf(good, "cut.json" -> utf8("""{"id": 2, "tags": ["b", """)),
+      "all-corrupt family" -> dirOf("x.json" -> utf8("""{"name": oops"""),
+        "y.json" -> utf8("not json {{{")),
+      "accounts whose arrays are all []" -> dirOf(
+        "e1.json" -> utf8("""{"accounts": [{"account": "A1", "transactions": []}]}"""),
+        "e2.json" -> utf8("""{"accounts": [{"account": "A2", "transactions": []}]}""")),
+      "top-level JSON array" -> dirOf(good,
+        "arr.json" -> utf8("""[{"id": 3, "extra": true}, {"id": 4}]""")),
+      "empty file" -> dirOf(good, "empty.json" -> Array.emptyByteArray),
+      "whitespace-only file" -> dirOf(good, "blank.json" -> utf8(" \n\t\n ")),
+      "UTF-8 document with a byte-order mark" -> dirOf(good,
+        "bom.json" -> (Array(0xEF, 0xBB, 0xBF).map(_.toByte) ++
+          utf8("""{"id": 5, "bom_only": "yes"}"""))))
+    // the reader the engine used before: multiLine inference and parse
+    // in one read
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for ((name, dir) <- cases) {
+      val want = spark.read.option("multiLine", "true").option("mode", "DROPMALFORMED")
+        .json(dir).withColumn("source_file", org.apache.spark.sql.functions.input_file_name())
+      val got = Router.read(spark, Seq(dir))
+      assert(got.schema == want.schema, name)
+      assert(rows(got) == rows(want), name)
+    }
+  }
+
+  test("route infers each family's schema in one job, reading no file as a binary stream") {
+    // multiLine inference reads every file through a BinaryFileRDD, which
+    // Spark names "JsonFile: <paths>"
+    val rddNames = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(
+          s: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        s.stageInfo.rddInfos.foreach(r => rddNames.add(r.name))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (routed, tags) = try jobTagsDuring(Router.routeManaged(spark, fixtureDir))
+      finally spark.sparkContext.removeSparkListener(listener)
+    routed.release()
+    // the route itself runs only the inferences; the parse waits for use
+    assert(tags.map(_._2).sorted == Seq("bankpipe", "creditpipe", "jsonpipe", "recpipe")
+      .map(p => s"graft route $p"), tags)
+    val binary = rddNames.toArray.collect { case n: String if n.startsWith("JsonFile: ") => n }
+    assert(binary.isEmpty, s"stages read files as binary streams: ${binary.toSeq}")
   }
 
   test("file queue consume-then-archive moves files only on commit (S6)") {

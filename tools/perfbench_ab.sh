@@ -16,6 +16,12 @@
 # flags and every end-to-end metric. Each run's JSON line is kept as
 # $AB_DIR/<side>.<workload>.<seed>.json. The first run in each copy
 # also compiles that copy (cached for the later runs).
+#
+# After the pairs it prints, for each end-to-end metric, each side's
+# median [Q1, Q3] over the pairs in which both sides gave a result
+# (quartiles by linear interpolation), the change's median relative to
+# the base's, and the number of those pairs in which the change read
+# lower.
 set -euo pipefail
 rev=${1:?usage: $0 <rev> <workload> <first-seed> <pairs> [seconds]}
 workload=${2:?workload}
@@ -56,3 +62,31 @@ for side in ("base", "change"):
 print(f"seed={seed} first={first} | " + " | ".join(cells), flush=True)
 EOF
 done
+python3 - "$dir" "$workload" "$first" "$pairs" <<'EOF'
+import json, statistics, sys
+d, workload, first, pairs = sys.argv[1], sys.argv[2], int(sys.argv[3]), int(sys.argv[4])
+runs = []
+for seed in range(first, first + pairs):
+    try:
+        pair = []
+        for side in ("base", "change"):
+            with open(f"{d}/{side}.{workload}.{seed}.json") as f:
+                pair.append(json.loads(f.read())["metrics"])
+        runs.append(pair)
+    except (OSError, ValueError, KeyError):
+        pass
+def spread(xs):
+    if len(xs) < 2:
+        return f"{xs[0]:.3f} [-, -]"
+    q1, q2, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return f"{q2:.3f} [{q1:.3f}, {q3:.3f}]"
+print(f"# summary over {len(runs)} of {pairs} pairs: base median [Q1, Q3] | "
+      "change median [Q1, Q3] | change/base - 1 | pairs with change lower")
+for k in (runs[0][0] if runs else {}):
+    b = [p[0][k]["value"] for p in runs]
+    c = [p[1][k]["value"] for p in runs]
+    mb = statistics.median(b)
+    rel = f"{statistics.median(c) / mb - 1:+.1%}" if mb else "n/a"
+    lower = sum(y < x for x, y in zip(b, c))
+    print(f"{k}: base {spread(b)} | change {spread(c)} | {rel} | {lower}/{len(runs)}")
+EOF
