@@ -4,6 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.PartitionedCheckpoint.{
+  localCheckpointHashPartitioned => checkpointOn,
+  localCheckpointHashPartitionedCounted => checkpointOnCounted}
 
 /** User-facing facade: the engine's reusable operators, parameterized
   * over arbitrary DataFrames (the `SparkEntry` queries are these same
@@ -16,8 +19,6 @@ import org.apache.spark.sql.functions._
   * claim to the query body) except these, which only specs exercise:
   *  - [[topKPerGroup]]: the plain window spelling that specs hold
   *    [[topKPerGroupNative]] (the form the queries run) equal to;
-  *  - [[pageRankFrom]]: a wrapper over the warm-start loop q119 runs
-  *    directly, sharing one edge checkpoint between its two rank calls;
   *  - [[assignToCentroids]]: one projection of the centroid argmax that
   *    d14 ([[semanticDedupWithCentroids]]) and s07 ([[kmeansFitLong]])
   *    run under the gate;
@@ -28,39 +29,6 @@ import org.apache.spark.sql.functions._
   *  - [[dedupNear]]'s final anti-join: its removal map is d08's binding.
   */
 object Graft {
-
-  /** Partitioning-preserving eager local checkpoint — the severing
-    * primitive every iterative graph loop here builds on. A plain
-    * `repartition(n, keys).localCheckpoint()` comes back reporting
-    * `UnknownPartitioning` in Spark 4.1 under AQE (measured; PERF.md
-    * round 14), so each severed round re-exchanges the EDGE-sized
-    * side of its join to re-place rows that are already correctly
-    * placed. This helper re-declares the `HashPartitioning(keys, n)`
-    * the repartition really applied (see
-    * [[org.apache.spark.sql.graftshim.PartitionedCheckpoint]]), so a
-    * round's join against the checkpoint plans a bare scan — zero
-    * exchange, which at 100 TB is the difference between a loop that
-    * shuffles the edge list once and one that shuffles it every
-    * round. */
-  private def checkpointOn(df: DataFrame, nPart: Int,
-      keys: String*): DataFrame =
-    org.apache.spark.sql.graftshim.PartitionedCheckpoint
-      .localCheckpointHashPartitioned(df, nPart, keys: _*)
-
-  /** [[checkpointOn]] plus the row count its eager materialization
-    * already computed (r21): the iterative loops' convergence probes
-    * (k-core's per-round survivor `count()`, BFS's and frontier
-    * SSSP's exhausted-frontier `isEmpty`) were each a SECOND
-    * dispatched job against the checkpoint they had just built —
-    * pure scheduler round-trip, one per loop round, priced by the
-    * `__job_latency` canary at ~0.1–0.2 s each under load. The
-    * count comes back with the checkpoint instead; `count == 0` is
-    * exactly `isEmpty`, and a projection over the checkpoint has
-    * exactly its row count, so every fold below is an identity. */
-  private def checkpointOnCounted(df: DataFrame, nPart: Int,
-      keys: String*): (DataFrame, Long) =
-    org.apache.spark.sql.graftshim.PartitionedCheckpoint
-      .localCheckpointHashPartitionedCounted(df, nPart, keys: _*)
 
   /** In-plan eager validation: evaluates to `value`, or raises `msg`
     * on the first row where `bad` holds. Riding the guard on a column
@@ -1769,6 +1737,53 @@ object Graft {
       pmod(h1 + lit(d.toLong) * h2, lit(width)).cast("int")): _*).as("__cols")
   }
 
+  /** The round skeleton every iterative graph loop below runs on.
+    * Round `r` (1-based) maps the state through `step`, which also
+    * answers whether another round may run; the loop ends after
+    * `maxRounds` rounds or after a round whose step answered `false`.
+    * After every `severEvery`-th round except round `maxRounds`, the
+    * state passes through `sever` (a declared-partition checkpoint on
+    * the node key), so a long loop's plan never compounds. Loops whose
+    * step already checkpoints every round (the counted frontier and
+    * survivor checkpoints) pass `identity`. */
+  private def rounds[S](init: S, maxRounds: Int, severEvery: Int)(
+      sever: S => S)(step: (S, Int) => (S, Boolean)): S = {
+    var state = init
+    var r = 0
+    var more = true
+    while (more && r < maxRounds) {
+      r += 1
+      val (next, go) = step(state, r)
+      state = if (r % severEvery == 0 && r < maxRounds) sever(next) else next
+      more = go
+    }
+    state
+  }
+
+  /** The node set src ∪ dst of an edge frame, as one `node` column: a
+    * sink node (dst only) gets its row too. Lazy; callers checkpoint
+    * it on `node`. */
+  private def nodesOf(e: DataFrame): DataFrame =
+    e.select(col("src").as("node"))
+      .unionAll(e.select(col("dst").as("node"))).distinct()
+
+  /** A seed frame's first column as a distinct `node` column. The
+    * seeded loops call it before their first checkpoint, so a seed
+    * frame without columns fails with `IllegalArgumentException`
+    * before any job is dispatched. */
+  private def seedNodes(seeds: DataFrame): DataFrame = {
+    require(seeds.columns.nonEmpty, "seeds must have at least one column")
+    seeds.select(col(seeds.columns(0)).as("node")).distinct()
+  }
+
+  /** The relaxation update of the min-label loops ([[temporalReach]]
+    * and both [[shortestPaths]] modes): per node, the minimum `c` over
+    * the current labels and the relaxed candidates, min-folded
+    * partially map-side into a node-sized frame. */
+  private def minMerge(cur: DataFrame, relaxed: DataFrame,
+      c: String): DataFrame =
+    cur.unionByName(relaxed).groupBy(col("node")).agg(min(col(c)).as(c))
+
   /** Damped PageRank over an edge list (`src`, `dst` columns), every
     * arithmetic step INTEGER-EXACT so distributed re-partitioning,
     * merge order, and engine cannot change a single rank: ranks live
@@ -1803,69 +1818,69 @@ object Graft {
     // checkpoint (checkpointOn). (A plain
     // repartition+localCheckpoint does NOT suffice: under AQE
     // the checkpoint reports UnknownPartitioning — PERF.md r14.)
-    val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
-    pageRankRounds(
-      checkpointOn(edges.select(col("src"), col("dst")), nPart, "src"),
+    pageRankRounds(checkpointOn(edges.select(col("src"), col("dst")), "src"),
       None, iters, dampingPct)
   }
 
-  /** The PageRank family's argument contract. The public wrappers
-    * check it BEFORE their eager edge checkpoint, so an invalid call
-    * fails without dispatching a job. */
+  /** The PageRank family's argument contract. [[pageRank]] and
+    * [[personalizedPageRank]] check it BEFORE their eager edge
+    * checkpoint, so an invalid call fails without dispatching a job. */
   private def requirePageRankArgs(iters: Int, dampingPct: Int): Unit = {
     require(iters >= 1 && iters <= 20, s"iters out of range: $iters")
     require(dampingPct >= 0 && dampingPct <= 100,
       s"dampingPct out of range: $dampingPct")
   }
 
-  /** The shared [[pageRank]]/[[pageRankFrom]] loop over a PREPARED
-    * edge frame: `e` must already be materialized (a checkpoint scan,
-    * or a partitioning-preserving filter/projection over one) and
+  /** [[pageRank]]'s loop over a PREPARED edge frame, cold or warm:
+    * `e` must already be materialized (a checkpoint scan, or a
+    * partitioning-preserving filter/projection over one) and
     * hash-partitioned on `src` with the session shuffle-partition
-    * count — the public wrappers guarantee it by checkpointing the
-    * caller's plan; q119 enters here directly so its standing and
-    * merged graphs derive from ONE materialized flagged edge
-    * checkpoint instead of each call re-materializing its own copy
-    * (r21 — the hits() eByDst derivation, one level up).
+    * count. [[pageRank]] guarantees it by checkpointing the caller's
+    * plan; q119 enters here directly so its standing and merged graphs
+    * derive from ONE materialized flagged edge checkpoint instead of
+    * each call re-materializing its own copy.
     *
     * `init = None` is cold start (every rank 1e9, and round 1 uses
     * the algebraic identity: the scatter is a direct projection of
-    * the degree-annotated edge list — one edge-sized join eliminated);
-    * `init = Some(prior)` is the warm start (prior ranks joined onto
-    * the current node set, new nodes cold at 1e9, every round joins
-    * because the init vector is arbitrary). Math and per-round plans
-    * are EXACTLY the two pre-r21 bodies' — edgesD checkpoints
-    * hash-partitioned on src and nodes on node, so each iteration's
-    * two joins see co-partitioned inputs and plan ZERO exchange on
-    * the checkpointed sides; the only per-iteration shuffle left is
-    * the contrib scatter's groupBy(dst->node), the irreducible one. */
+    * the degree-annotated edge list — one edge-sized join eliminated).
+    * `init = Some(prior)` is the warm start, the graph-maintenance
+    * primitive q119 runs: after a batch of edges lands, ranks
+    * re-converge from the prior fixed point in a couple of rounds
+    * instead of re-paying the full iteration count from cold. Prior
+    * ranks join onto the CURRENT node set, so nodes new to the graph
+    * start at the cold 1e9 and prior ranks of vanished nodes drop;
+    * every round joins, because the init vector is arbitrary. Either
+    * way the result is exactly "iters synchronous rounds from the
+    * initial vector", mirrorable by unrolled integer CTEs (q119's
+    * gate).
+    *
+    * edgesD checkpoints hash-partitioned on src and nodes on node, so
+    * each iteration's two joins see co-partitioned inputs and plan
+    * ZERO exchange on the checkpointed sides; the only per-iteration
+    * shuffle left is the contrib scatter's groupBy(dst->node), the
+    * irreducible one. Long trainings sever the node-sized ranks every
+    * 4 rounds (never an edge-sized materialization). */
   private[graft] def pageRankRounds(e: DataFrame, init: Option[DataFrame],
       iters: Int, dampingPct: Int): DataFrame = {
     requirePageRankArgs(iters, dampingPct)
-    val nPart = e.sparkSession.sessionState.conf.numShufflePartitions
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__outdeg"))
-    val edgesD = checkpointOn(
-      e.join(deg.hint("shuffle_hash"), "src"), nPart, "src")
+    val edgesD = checkpointOn(e.join(deg.hint("shuffle_hash"), "src"), "src")
     // node set = src ∪ dst: a sink node (appears only as dst) has no
     // out-edges but still owns a rank row — it keeps its teleport term
-    // and accumulates inbound mass via the left join below (r12 ADVICE:
-    // deriving nodes from the out-degree table silently dropped it)
-    val nodes = checkpointOn(
-      e.select(col("src").as("node"))
-        .unionAll(e.select(col("dst").as("node"))).distinct(),
-      nPart, "node")
+    // and accumulates inbound mass via the left join below (a node set
+    // derived from the out-degree table would drop it)
+    val nodes = checkpointOn(nodesOf(e), "node")
     val teleport = (100L - dampingPct) * 10000000L  // (1-d) * 1e9
-    var ranks = init match {
+    val ranks0 = init match {
       case Some(prior) => checkpointOn(
         nodes.join(prior.hint("shuffle_hash"), Seq("node"), "left")
           .select(col("node"),
             coalesce(col("rank_e9"), lit(1000000000L)).as("rank_e9")),
-        nPart, "node")
+        "node")
       case None =>
         nodes.select(col("node"), lit(1000000000L).as("rank_e9"))
     }
-    var i = 0
-    while (i < iters) {
+    rounds(ranks0, iters, severEvery = 4)(checkpointOn(_, "node")) { (ranks, r) =>
       // cold round 1's rank join is algebraically redundant: every
       // rank is the constant 1e9, so the joined scatter equals a
       // direct projection of the degree-annotated edge list — one
@@ -1874,7 +1889,7 @@ object Graft {
       // side keeps a sort-merge plan from re-sorting the checkpointed
       // edge list.
       val scatter =
-        if (i == 0 && init.isEmpty) edgesD.select(col("dst").as("node"),
+        if (r == 1 && init.isEmpty) edgesD.select(col("dst").as("node"),
           expr("cast(1000000000 as bigint) div __outdeg").as("__c"))
         else edgesD
           .join(ranks.hint("shuffle_hash"), edgesD("src") === ranks("node"))
@@ -1882,44 +1897,12 @@ object Graft {
             expr("rank_e9 div __outdeg").as("__c"))
       val contrib = scatter
         .groupBy(col("node")).agg(sum(col("__c")).as("__in"))
-      ranks = nodes.join(contrib.hint("shuffle_hash"), Seq("node"), "left")
+      (nodes.join(contrib.hint("shuffle_hash"), Seq("node"), "left")
         .select(col("node"),
           (lit(teleport) +
             expr(s"($dampingPct * coalesce(__in, 0L)) div 100"))
-            .as("rank_e9"))
-      i += 1
-      // long trainings: sever the compounding plan every few rounds
-      // (node-sized materialization, never edge-sized)
-      if (i % 4 == 0 && i < iters) ranks = checkpointOn(ranks, nPart, "node")
+            .as("rank_e9")), true)
     }
-    ranks
-  }
-
-  /** Warm-start PageRank — [[pageRank]]'s loop initialized from a
-    * PRIOR rank vector instead of the uniform 1e9: the graph-
-    * maintenance primitive (the d23/s25/s26 discipline applied to
-    * iterative analytics). After a batch of edges lands, ranks
-    * re-converge from yesterday's fixed point in a couple of rounds
-    * instead of re-paying the full iteration count from cold — the
-    * standard production cadence for web-scale rank maintenance.
-    * Nodes new to the graph start at the cold 1e9; prior ranks of
-    * vanished nodes drop (the join is on the CURRENT node set). Same
-    * integer e9 fixed-point discipline as [[pageRank]], so the result
-    * is exactly "iters more synchronous rounds from `init`" — fully
-    * mirrorable by unrolled CTEs (q119's gate). No round-1 identity
-    * here: the init vector is arbitrary, so every round joins.
-    *
-    * Scale shape: identical to [[pageRank]] — checkpointed
-    * pre-partitioned edge/node builds, node-sized state, zero
-    * edge-sized exchange per round; the init join is one extra
-    * node-sized hash join at build time. */
-  def pageRankFrom(edges: DataFrame, init: DataFrame, iters: Int = 2,
-      dampingPct: Int = 85): DataFrame = {
-    requirePageRankArgs(iters, dampingPct)
-    val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
-    pageRankRounds(
-      checkpointOn(edges.select(col("src"), col("dst")), nPart, "src"),
-      Some(init), iters, dampingPct)
   }
 
   /** Personalized PageRank: [[pageRank]] with the teleport mass
@@ -1936,8 +1919,8 @@ object Graft {
     *
     * Scale shape: pre-partitioned checkpointed edge/node builds and
     * zero edge-sized exchange per iteration like [[pageRank]], but
-    * the per-round state is REACHED-sized, not node-sized (r20):
-    * a node outside the seeds' i-hop neighborhood has rank exactly 0
+    * the per-round state is REACHED-sized, not node-sized: a node
+    * outside the seeds' i-hop neighborhood has rank exactly 0
     * (zero teleport, zero in-mass — pure integer arithmetic, so
     * "exactly" is literal), and a zero rank contributes 0 div outdeg
     * = 0 to every sum, so the scatter join and the rank update carry
@@ -1949,31 +1932,31 @@ object Graft {
     * row-per-node contract (the [[hits]] sparse-iteration shape).
     * Bit-identical to the dense spelling by induction: absent ≡ 0 at
     * round 0 (non-seeds), and a round maps only-zero in-neighbors to
-    * 0 = absent. */
+    * 0 = absent.
+    *
+    * Failure type: bad `iters` or `dampingPct`, or a `seeds` frame
+    * without columns, throws `IllegalArgumentException` before any
+    * job. */
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
       iters: Int = 3, dampingPct: Int = 85): DataFrame = {
     requirePageRankArgs(iters, dampingPct)
-    val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val e = checkpointOn(edges.select(col("src"), col("dst")), nPart, "src")
+    val seedSet = seedNodes(seeds)
+    val e = checkpointOn(edges.select(col("src"), col("dst")), "src")
     val deg = e.groupBy(col("src")).agg(count(lit(1)).as("__outdeg"))
-    val edgesD = checkpointOn(
-      e.join(deg.hint("shuffle_hash"), "src"), nPart, "src")
-    val seedSet = seeds.select(col(seeds.columns(0)).as("node")).distinct()
+    val edgesD = checkpointOn(e.join(deg.hint("shuffle_hash"), "src"), "src")
     val nodes = checkpointOn(
-      e.select(col("src").as("node"))
-        .unionAll(e.select(col("dst").as("node"))).distinct()
+      nodesOf(e)
         .join(seedSet.withColumn("__seed", lit(1L)), Seq("node"), "left")
         .select(col("node"), coalesce(col("__seed"), lit(0L)).as("__seed")),
-      nPart, "node")
+      "node")
     // graph-member seeds only (off-graph seeds are ignored by
     // contract); a filter over the declared-partition checkpoint
     // keeps the node partitioning — no exchange
-    val seedNodes = nodes.filter(col("__seed") === 1L).select(col("node"))
+    val graphSeeds = nodes.filter(col("__seed") === 1L).select(col("node"))
     val teleport = (100L - dampingPct) * 10000000L  // (1-d) * 1e9
-    var ranks = seedNodes.select(col("node"),
-      lit(1000000000L).as("rank_e9"))
-    var i = 0
-    while (i < iters) {
+    val ranks = rounds(
+        graphSeeds.select(col("node"), lit(1000000000L).as("rank_e9")),
+        iters, severEvery = 4)(checkpointOn(_, "node")) { (ranks, _) =>
       val contrib = edgesD
         .join(ranks.hint("shuffle_hash"), edgesD("src") === ranks("node"))
         .select(col("dst").as("node"),
@@ -1982,14 +1965,12 @@ object Graft {
       // sparse update: seeds keep their teleport term whether or not
       // mass arrived; non-seed receivers carry propagated mass only.
       // Absent nodes are exactly rank 0 (see scaladoc induction).
-      ranks = seedNodes.withColumn("__t", lit(teleport))
+      (graphSeeds.withColumn("__t", lit(teleport))
         .join(contrib.hint("shuffle_hash"), Seq("node"), "full_outer")
         .select(col("node"),
           (coalesce(col("__t"), lit(0L)) +
             expr(s"($dampingPct * coalesce(__in, 0L)) div 100"))
-            .as("rank_e9"))
-      i += 1
-      if (i % 4 == 0 && i < iters) ranks = checkpointOn(ranks, nPart, "node")
+            .as("rank_e9")), true)
     }
     // densify once: the contract is a rank row for EVERY graph node
     nodes.join(ranks.hint("shuffle_hash"), Seq("node"), "left")
@@ -2022,35 +2003,27 @@ object Graft {
     * keeps the exchange NODE-sized; the all-hash alternative, max
     * then min-of-argmax, would re-shuffle the PAIR-sized votes and
     * lose more network than the sort costs). The edge and node
-    * builds use the partitioning-declaring checkpoint
-    * ([[checkpointOn]]), so every round's vote join reads the edge
-    * list as a bare co-partitioned scan; labels sever EVERY round
-    * (r15). The r13 compounded-tree decision predated the
-    * partitioning-declaring checkpoint: severing then cost a full
-    * label re-exchange per round, which AQE stage reuse beat. With
-    * the declared partitioning a severed round pays zero
-    * re-exchange, and cutting the compounded tree stops each round
-    * re-planning (and under AQE re-running) the whole prefix:
-    * measured min-of-3 at sf0.1, canary-flat, 5.5 s compounded →
-    * 4.0 s severed (PERF.md r15). */
+    * builds use the partitioning-declaring checkpoint, so every
+    * round's vote join reads the edge list as a bare co-partitioned
+    * scan, and labels sever EVERY round: a severed label frame
+    * re-joins with zero exchange, and cutting the tree stops each
+    * round re-planning (and under AQE re-running) the whole prefix.
+    * Measured min-of-3 at sf0.1, canary-flat: 5.5 s with a
+    * compounded 3-round tree, 4.0 s severed every round (PERF.md
+    * r15). */
   def labelPropagation(edges: DataFrame, iters: Int = 3): DataFrame = {
     require(iters >= 1 && iters <= 20, s"iters out of range: $iters")
-    val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val e = checkpointOn(edges.select(col("src"), col("dst")), nPart, "src")
-    val nodes = checkpointOn(
-      e.select(col("src").as("node"))
-        .unionAll(e.select(col("dst").as("node"))).distinct(),
-      nPart, "node")
-    var labels = nodes.select(col("node"), col("node").as("lbl"))
-    var i = 0
-    while (i < iters) {
+    val e = checkpointOn(edges.select(col("src"), col("dst")), "src")
+    val nodes = checkpointOn(nodesOf(e), "node")
+    rounds(nodes.select(col("node"), col("node").as("lbl")), iters,
+        severEvery = 1)(checkpointOn(_, "node")) { (labels, r) =>
       // round 1's vote join is algebraically redundant: the initial
       // labeling is the identity (lbl(src) = src), so the joined
       // votes equal e.select(dst, src as lbl) exactly — including
       // edge multiplicity on multigraphs. One edge-sized join
       // eliminated per call; rounds 2+ need the real join.
       val voteSrc =
-        if (i == 0) e.select(col("dst"), col("src").as("lbl"))
+        if (r == 1) e.select(col("dst"), col("src").as("lbl"))
         else e.join(labels.hint("shuffle_hash"), e("src") === labels("node"))
           .select(col("dst"), col("lbl"))
       val votes = voteSrc
@@ -2058,27 +2031,20 @@ object Graft {
       // one fold replaces the sort-based top-1: struct comparison is
       // lexicographic, so min((-cnt, lbl)) = highest count, then
       // smallest label (counts are >= 1, so -cnt never overflows).
-      // Measured alternative (PERF.md r14): routing this through
-      // topKPerGroupNative(k=1) did NOT beat the SortAggregate here
-      // (6.4-8.5 s vs 6.5 s at sf0.1) — the custom node sits in a
-      // COMPOUNDED 3-round tree whose repeated stages AQE dedups by
-      // canonical equality, and the heap pass saves less than the
-      // disturbed reuse costs; reverted
+      // Measured alternative (PERF.md r14): topKPerGroupNative(k=1)
+      // did NOT beat the SortAggregate here (6.4-8.5 s vs 6.5 s at
+      // sf0.1) — the custom node sits in a compounded 3-round tree
+      // whose repeated stages AQE dedups by canonical equality, and
+      // the heap pass saves less than the disturbed reuse costs
       val best = votes
         .groupBy(col("dst"))
         .agg(min(struct((-col("__cnt")).as("nc"), col("lbl").as("l")))
           .as("__b"))
         .select(col("dst").as("node"), col("__b.l").as("__new"))
-      labels = labels.join(best.hint("shuffle_hash"), Seq("node"), "left")
-        .select(col("node"), coalesce(col("__new"), col("lbl")).as("lbl"))
-      i += 1
-      // sever every round: with the declared-partitioning checkpoint a
-      // severed label frame re-joins with zero exchange, so the old
-      // compounded-tree trade (AQE stage reuse vs re-planned prefix)
-      // flipped — see the scaladoc measurement
-      if (i < iters) labels = checkpointOn(labels, nPart, "node")
+      (labels.join(best.hint("shuffle_hash"), Seq("node"), "left")
+        .select(col("node"), coalesce(col("__new"), col("lbl")).as("lbl")),
+        true)
     }
-    labels
   }
 
   /** Iterative k-core peel over an UNDIRECTED (symmetrized) edge
@@ -2110,29 +2076,21 @@ object Graft {
     require(k >= 1, s"k out of range: $k")
     require(maxRounds >= 1 && maxRounds <= 20,
       s"maxRounds out of range: $maxRounds")
-    val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val e = checkpointOn(edges.select(col("src"), col("dst")), nPart, "dst")
-    // survivor counts ride the eager checkpoints (checkpointOnCounted,
-    // r21): the separate per-round keep.count() job is gone — keep is
-    // a projection of the round's deg checkpoint, so the checkpoint's
-    // own row count IS the survivor count
-    val (keep0, nKeep0) = checkpointOnCounted(
-      e.select(col("src").as("node"))
-        .unionAll(e.select(col("dst").as("node"))).distinct(),
-      nPart, "node")
-    var keep = keep0
-    var nKeep = nKeep0
-    var round = 0
-    var done = false
-    var deg = keep.select(col("node"), lit(0L).as("deg"))
-    while (round < maxRounds && !done) {
+    val e = checkpointOn(edges.select(col("src"), col("dst")), "dst")
+    // survivor counts are the row counts of the eager checkpoints:
+    // keep is a projection of the round's deg checkpoint, so no round
+    // dispatches a count job of its own
+    val (nodes, nNodes) = checkpointOnCounted(nodesOf(e), "node")
+    rounds((nodes.select(col("node"), lit(0L).as("deg")), nNodes),
+        maxRounds, severEvery = 1)(identity) { case ((deg, nKeep), r) =>
       // deg(v) = surviving out-edges of v (dst must survive); the
       // src-side restriction rides the trailing semi-join. Round 1
-      // specializes: keep is ALL endpoints by construction, so both
-      // joins are vacuous and the round is one bare degree count
-      // (the labelPropagation/pageRank round-1 identity).
+      // specializes: the survivors are ALL endpoints by construction,
+      // so both joins are vacuous and the round is one bare degree
+      // count (the labelPropagation/pageRank round-1 identity).
+      val keep = deg.select(col("node"))
       val d =
-        if (round == 0) e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        if (r == 1) e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
         else e
           .join(keep.withColumnRenamed("node", "dst").hint("shuffle_hash"),
             Seq("dst"))
@@ -2140,14 +2098,9 @@ object Graft {
           .join(keep.withColumnRenamed("node", "src"), Seq("src"), "left_semi")
       val (degC, n) = checkpointOnCounted(
         d.filter(col("deg") >= k).select(col("src").as("node"), col("deg")),
-        nPart, "node")
-      deg = degC
-      keep = deg.select(col("node"))
-      done = n == nKeep
-      nKeep = n
-      round += 1
-    }
-    deg
+        "node")
+      ((degC, n), n != nKeep)
+    }._1
   }
 
   /** HITS hubs & authorities over a DIRECTED edge list (`src`, `dst`
@@ -2184,23 +2137,17 @@ object Graft {
     * naive long product at exactly the scale this engine targets. */
   def hits(edges: DataFrame, iters: Int = 2): DataFrame = {
     require(iters >= 1 && iters <= 10, s"iters out of range: $iters")
-    val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
     // two checkpointed copies, each pre-partitioned on its probe key:
     // eBySrc feeds the auth scatter (joins ranks on src), eByDst the
     // hub gather (joins auths on dst). eByDst derives from eBySrc —
     // NOT from the caller's plan — so the upstream edge build (for
-    // q113: a lineitem⋈orders join + distinct) runs ONCE; the second
-    // copy costs one re-shuffle of the materialized edge list (r20:
-    // was two full upstream computations; interleaved same-window
-    // min-of-3 A/B at sf0.1 read 5.85 → 5.14 s on q113, ~the upstream
-    // build's warm cost).
-    val eBySrc = checkpointOn(
-      edges.select(col("src"), col("dst")), nPart, "src")
-    val eByDst = checkpointOn(eBySrc, nPart, "dst")
-    val nodes = checkpointOn(
-      eBySrc.select(col("src").as("node"))
-        .unionAll(eBySrc.select(col("dst").as("node"))).distinct(),
-      nPart, "node")
+    // q113: a lineitem⋈orders join + distinct) runs ONCE and the
+    // second copy costs one re-shuffle of the materialized edge list
+    // (interleaved same-window min-of-3 A/B at sf0.1: 5.85 s with two
+    // upstream computations, 5.14 s with one, on q113).
+    val eBySrc = checkpointOn(edges.select(col("src"), col("dst")), "src")
+    val eByDst = checkpointOn(eBySrc, "dst")
+    val nodes = checkpointOn(nodesOf(eBySrc), "node")
     // scale raw sums so max maps to exactly 1e6 — integral div on a
     // DECIMAL(38,0) cross-product (result <= 1e6, long by `div`).
     // The raw frame SEVERS first (node-sized): the scalar max and the
@@ -2214,7 +2161,7 @@ object Graft {
     // exactly once, at the end (measured 5.7 s -> saves the 4
     // node-frame left joins).
     def rescale(raw0: DataFrame, out: String): DataFrame = {
-      val raw = checkpointOn(raw0, nPart, "node")
+      val raw = checkpointOn(raw0, "node")
       val mx = raw.agg(max(col("__raw")).as("__mx"))
       raw.crossJoin(broadcast(mx))
         .select(col("node"),
@@ -2223,31 +2170,28 @@ object Graft {
               "(cast(__raw as decimal(38,0)) * 1000000) div __mx"))
             .as(out))
     }
-    var hub = nodes.select(col("node"), lit(1000000L).as("hub_e6"))
-    var auth: DataFrame = null
-    var i = 0
-    while (i < iters) {
-      // round 1's hub join is algebraically redundant (every hub is
-      // the constant 1e6 — the pageRank round-1 identity)
-      val aRaw =
-        if (i == 0) eBySrc.groupBy(col("dst").as("node"))
-          .agg(sum(lit(1000000L)).as("__raw"))
-        else eBySrc
-          .join(hub.hint("shuffle_hash"), eBySrc("src") === hub("node"))
-          .groupBy(col("dst").as("node"))
-          .agg(sum(col("hub_e6")).as("__raw"))
-      auth = rescale(aRaw, "auth_e6")
-      val hRaw = eByDst
-        .join(auth.hint("shuffle_hash"), eByDst("dst") === auth("node"))
-        .groupBy(col("src").as("node"))
-        .agg(sum(col("auth_e6")).as("__raw"))
-      hub = rescale(hRaw, "hub_e6")
-      i += 1
-      // long runs: sever the compounding plan (node-sized state)
-      if (i % 4 == 0 && i < iters) {
-        hub = checkpointOn(hub, nPart, "node")
-        auth = checkpointOn(auth, nPart, "node")
-      }
+    // state (hub, auth); auth has no value before round 1. Long runs
+    // sever both node-sized frames every 4 rounds.
+    val (hub, auth) = rounds[(DataFrame, DataFrame)](
+        (nodes.select(col("node"), lit(1000000L).as("hub_e6")), null),
+        iters, severEvery = 4)({ case (h, a) =>
+          (checkpointOn(h, "node"), checkpointOn(a, "node")) }) {
+      case ((hub, _), r) =>
+        // round 1's hub join is algebraically redundant (every hub is
+        // the constant 1e6 — the pageRank round-1 identity)
+        val aRaw =
+          if (r == 1) eBySrc.groupBy(col("dst").as("node"))
+            .agg(sum(lit(1000000L)).as("__raw"))
+          else eBySrc
+            .join(hub.hint("shuffle_hash"), eBySrc("src") === hub("node"))
+            .groupBy(col("dst").as("node"))
+            .agg(sum(col("hub_e6")).as("__raw"))
+        val auth = rescale(aRaw, "auth_e6")
+        val hRaw = eByDst
+          .join(auth.hint("shuffle_hash"), eByDst("dst") === auth("node"))
+          .groupBy(col("src").as("node"))
+          .agg(sum(col("auth_e6")).as("__raw"))
+        ((rescale(hRaw, "hub_e6"), auth), true)
     }
     // the full node frame joins back HERE, once: iteration frames are
     // sparse (zero-score nodes dropped — see rescale), the contract
@@ -2273,28 +2217,23 @@ object Graft {
     * localCheckpoint'd once and reused), a frontier-sized distinct,
     * and an anti-join against visited — frontier and visited are
     * NODE-sized, never edge-sized, and the driver holds nothing.
-    * Each new frontier and the growing visited set localCheckpoint
-    * so the loop's lineage never compounds (the [[pageRank]]
-    * discipline). An exhausted frontier short-circuits the loop via
-    * isEmpty — a metadata-cheap probe on the checkpointed frame. */
+    * Each new frontier localCheckpoints, so the loop's lineage never
+    * compounds (the [[pageRank]] discipline). An exhausted frontier
+    * short-circuits the loop; its size is the row count the frontier's
+    * eager checkpoint already computed, so the test costs no job.
+    *
+    * Failure type: `maxHops` out of range, or a `seeds` frame without
+    * columns, throws `IllegalArgumentException` before any job. */
   def bfsHops(edges: DataFrame, seeds: DataFrame,
       maxHops: Int): DataFrame = {
     require(maxHops >= 1 && maxHops <= 30, s"maxHops out of range: $maxHops")
-    val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
-    val e = checkpointOn(edges.select(col("src"), col("dst")), nPart, "src")
-    // frontier sizes ride the eager checkpoints (checkpointOnCounted,
-    // r21): the per-hop exhausted-frontier isEmpty probe was a second
-    // dispatched job on the hop's fresh checkpoint; count == 0 is the
-    // same predicate, already computed
-    val (v0, nSeeds) = checkpointOnCounted(
-      seeds.select(col(seeds.columns(0)).as("node")).distinct()
-        .withColumn("hop", lit(0L)),
-      nPart, "node")
-    var visited = v0
-    var frontier = visited.select(col("node"))
-    var nFront = nSeeds
-    var i = 1
-    while (i <= maxHops && nFront > 0) {
+    val seedSet = seedNodes(seeds)
+    val e = checkpointOn(edges.select(col("src"), col("dst")), "src")
+    val (v0, nSeeds) =
+      checkpointOnCounted(seedSet.withColumn("hop", lit(0L)), "node")
+    if (nSeeds == 0) v0
+    else rounds((v0, v0.select(col("node"))), maxHops, severEvery = 1)(
+        identity) { case ((visited, frontier), hop) =>
       // shuffle_hash on the node-sized sides: the declared-partition
       // checkpoints carry no size stats, so an unhinted plan falls to
       // sort-merge and re-sorts the EDGE list every hop
@@ -2304,18 +2243,14 @@ object Graft {
           .select(col("dst").as("node")).distinct()
           .join(visited.select(col("node")).hint("shuffle_hash"),
             Seq("node"), "left_anti")
-          .select(col("node"), lit(i.toLong).as("hop")),
-        nPart, "node")
+          .select(col("node"), lit(hop.toLong).as("hop")),
+        "node")
       // visited is a plain union of ALREADY-checkpointed hop frames —
       // re-checkpointing it would materialize the whole node set once
       // per hop for no lineage benefit (the union tree is depth-1 over
       // checkpoints)
-      visited = visited.unionAll(next)
-      frontier = next.select(col("node"))
-      nFront = n
-      i += 1
-    }
-    visited
+      ((visited.unionAll(next), next.select(col("node"))), n > 0)
+    }._1
   }
 
   /** Time-respecting (temporal) reachability — earliest-arrival
@@ -2336,47 +2271,39 @@ object Graft {
     * directions for undirected contact.
     *
     * Scale shape: the event list checkpoints hash-partitioned on src
-    * ONCE ([[checkpointOn]] — the declared-partition severing
-    * primitive), so each round's relax join plans a bare edge scan;
-    * arrivals are NODE-sized, min-folded partially map-side, and
-    * sever every 2 rounds. The time filter rides the join, so a
-    * round's shuffle carries transmitting events only.
+    * ONCE (the declared-partition severing checkpoint), so each
+    * round's relax join plans a bare edge scan; arrivals are
+    * NODE-sized, min-folded partially map-side, and sever every 2
+    * rounds. The time filter rides the join, so a round's shuffle
+    * carries transmitting events only.
     *
-    * Failure type: `iters` out of range throws
-    * `IllegalArgumentException` before any job. A null or uncastable
-    * event time is caught in-plan (`raise_error` on the eager event
-    * checkpoint's projection), so the call fails as a Spark execution
-    * exception (`org.apache.spark.SparkRuntimeException`,
-    * USER_RAISED_EXCEPTION, on local mode) with "null or uncastable
-    * event time" in its cause chain — not as
-    * `IllegalArgumentException`. */
+    * Failure type: `iters` out of range, or a `seeds` frame without
+    * columns, throws `IllegalArgumentException` before any job. A
+    * null or uncastable event time is caught in-plan (`raise_error`
+    * on the eager event checkpoint's projection), so the call fails
+    * as a Spark execution exception
+    * (`org.apache.spark.SparkRuntimeException`, USER_RAISED_EXCEPTION,
+    * on local mode) with "null or uncastable event time" in its cause
+    * chain — not as `IllegalArgumentException`. */
   def temporalReach(edges: DataFrame, seeds: DataFrame, startT: Long,
       iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 30, s"iters out of range: $iters")
-    val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val seedSet = seedNodes(seeds)
     // the time-validity guard rides the one projection the (eager)
     // checkpoint materializes — single scan, still fails at build time
     val tl = col("t").cast("long")
     val e = checkpointOn(
       edges.select(col("src"), col("dst"),
         guarded(tl.isNull, "null or uncastable event time", tl).as("t")),
-      nPart, "src")
-    var arr = checkpointOn(
-      seeds.select(col(seeds.columns(0)).as("node")).distinct()
-        .withColumn("t_arr", lit(startT)),
-      nPart, "node")
-    var i = 0
-    while (i < iters) {
+      "src")
+    val arr0 = checkpointOn(seedSet.withColumn("t_arr", lit(startT)), "node")
+    rounds(arr0, iters, severEvery = 2)(checkpointOn(_, "node")) { (arr, _) =>
       val relaxed = e
         .join(arr.hint("shuffle_hash"), e("src") === arr("node"))
         .filter(col("t") >= col("t_arr"))
         .select(col("dst").as("node"), col("t").as("t_arr"))
-      arr = arr.unionByName(relaxed)
-        .groupBy(col("node")).agg(min(col("t_arr")).as("t_arr"))
-      i += 1
-      if (i % 2 == 0 && i < iters) arr = checkpointOn(arr, nPart, "node")
+      (minMerge(arr, relaxed, "t_arr"), true)
     }
-    arr
   }
 
   /** Harman's S-stemmer (the published 3-rule plural stripper —
@@ -2455,11 +2382,10 @@ object Graft {
     // partitioning DECLARED (checkpointOn — a plain localCheckpoint
     // reports UnknownPartitioning and the closure's x-side probe
     // join re-exchanges the exploded edge list, PERF.md r14)
-    val nPartT = edges.sparkSession.sessionState.conf.numShufflePartitions
     val adjId = checkpointOn(
       und.groupBy(col("x"))
         .agg(sort_array(collect_set(col("y"))).as("__nbrs")),
-      nPartT, "x")
+      "x")
     val adj =
       if (!byDegree) adjId
       else {
@@ -2489,7 +2415,7 @@ object Graft {
             .groupBy(col("u"))
             .agg(sort_array(collect_set(col("v"))).as("__nbrs"))
             .withColumnRenamed("u", "x"),
-          nPartT, "x")
+          "x")
       }
     // deduped + oriented by construction: explode of the adjacency
     // sets IS the distinct edge list, no second exchange needed
@@ -2553,14 +2479,13 @@ object Graft {
     // bare scan of the edge-sized artifact; the capped adjacency
     // checkpoints PRE-PARTITIONED on z so the pair self-join plans
     // zero exchange on either side.
-    val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
     val e = edges.select(col("src"), col("dst")).localCheckpoint(true)
     val adj = e.select(col("src").as("z"), col("dst").as("n"))
       .unionAll(e.select(col("dst").as("z"), col("src").as("n")))
     val deg = adj.groupBy(col("z")).agg(count(lit(1)).as("__deg"))
     val small = checkpointOn(
       adj.join(deg.hint("shuffle_hash"), "z")
-        .filter(col("__deg") <= maxHubDegree), nPart, "z")
+        .filter(col("__deg") <= maxHubDegree), "z")
     val cand = small.select(col("z"), col("n").as("a"), col("__deg"))
       .join(small.select(col("z"), col("n").as("b")), "z")
       .filter(col("a") < col("b"))
@@ -2837,8 +2762,9 @@ object Graft {
     * nonnegative weights a bounded-round result is monotone in `iters`
     * and safe to read as "distance using <= iters hops".
     *
-    * Failure type: `iters` out of range throws
-    * `IllegalArgumentException` before any job. A bad weight is caught
+    * Failure type: `iters` out of range, or a `seeds` frame without
+    * columns, throws `IllegalArgumentException` before any job. A bad
+    * weight is caught
     * in-plan (`raise_error` on the eager edge checkpoint's projection),
     * so the call fails as a Spark execution exception
     * (`org.apache.spark.SparkRuntimeException`, USER_RAISED_EXCEPTION,
@@ -2847,64 +2773,48 @@ object Graft {
   def shortestPaths(edges: DataFrame, seeds: DataFrame,
       iters: Int, frontier: Boolean = false): DataFrame = {
     require(iters >= 1 && iters <= 30, s"iters out of range: $iters")
-    // pre-partitioned on the probe key with an explicit count (the
-    // pageRank discipline): every relaxation round's edge-sized join
-    // input is then a bare checkpoint scan — no per-round edge
-    // exchange, no per-round edge sort
-    val nPart = edges.sparkSession.sessionState.conf.numShufflePartitions
+    val seedSet = seedNodes(seeds)
     // NULL weights (including uncastable strings under the long cast)
     // must be rejected, not silently min()-ignored: NULL < 0 is NULL,
-    // so the negative-only guard let them through (r13 ADVICE). The
-    // guard rides the one projection the eager checkpoint
-    // materializes (the r15 in-plan guarded() discipline, r21 here):
-    // the separate require(filter.isEmpty) spelling dispatched one
-    // more whole job and one more pass over the checkpointed edge
-    // list per call. Still fails at build time, before any result.
+    // so a negative-only guard would let them through. The guard
+    // rides the one projection the eager checkpoint materializes (the
+    // in-plan guarded() discipline): a separate require(filter.isEmpty)
+    // would dispatch one more whole job and one more pass over the
+    // checkpointed edge list per call. Still fails at build time,
+    // before any result. The checkpoint is pre-partitioned on the
+    // probe key (the pageRank discipline): every relaxation round's
+    // edge-sized join input is then a bare checkpoint scan — no
+    // per-round edge exchange, no per-round edge sort.
     val wl = col("w").cast("long")
     val e = checkpointOn(
       edges.select(col("src"), col("dst"),
         guarded(wl.isNull || wl < 0,
           "negative or null edge weight", wl).as("w")),
-      nPart, "src")
-    // frontier sizes ride the eager checkpoints (checkpointOnCounted,
-    // r21): the per-round exhausted-frontier isEmpty probe was a
-    // second dispatched job on the round's fresh checkpoint
-    val (dist0, nSeeds) = checkpointOnCounted(
-      seeds.select(col(seeds.columns(0)).as("node")).distinct()
-        .withColumn("d", lit(0L)),
-      nPart, "node")
-    var dist = dist0
-    var front = dist
-    var nFront = nSeeds
-    var i = 0
-    while (i < iters && (!frontier || nFront > 0)) {
-      if (frontier) {
-        val cand = e.join(front.hint("shuffle_hash"),
-            e("src") === front("node"))
-          .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
-          .groupBy(col("node")).agg(min(col("d")).as("d"))
-        val (improved, nImp) = checkpointOnCounted(
-          cand
-            .join(dist.select(col("node"), col("d").as("__old")),
-              Seq("node"), "left")
-            .filter(col("__old").isNull || col("d") < col("__old"))
-            .select(col("node"), col("d")),
-          nPart, "node")
-        dist = dist.unionByName(improved)
-          .groupBy(col("node")).agg(min(col("d")).as("d"))
-        front = improved
-        nFront = nImp
-      } else {
-        val relaxed = e.join(dist.hint("shuffle_hash"),
-            e("src") === dist("node"))
-          .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
-        dist = dist.unionByName(relaxed)
-          .groupBy(col("node")).agg(min(col("d")).as("d"))
-      }
-      i += 1
-      if (i % 2 == 0 && i < iters) dist = checkpointOn(dist, nPart, "node")
-    }
-    dist
+      "src")
+    // the seed count is the eager checkpoint's row count, and so is
+    // each frontier round's improvement count: the exhausted-frontier
+    // test dispatches no job of its own
+    val (dist0, nSeeds) =
+      checkpointOnCounted(seedSet.withColumn("d", lit(0L)), "node")
+    def relax(from: DataFrame): DataFrame =
+      e.join(from.hint("shuffle_hash"), e("src") === from("node"))
+        .select(col("dst").as("node"), (col("d") + col("w")).as("d"))
+    if (!frontier)
+      rounds(dist0, iters, severEvery = 2)(checkpointOn(_, "node")) {
+        (dist, _) => (minMerge(dist, relax(dist), "d"), true) }
+    else if (nSeeds == 0) dist0
+    else rounds((dist0, dist0), iters, severEvery = 2)({ case (dist, front) =>
+        (checkpointOn(dist, "node"), front) }) { case ((dist, front), _) =>
+      val cand = relax(front).groupBy(col("node")).agg(min(col("d")).as("d"))
+      val (improved, nImp) = checkpointOnCounted(
+        cand
+          .join(dist.select(col("node"), col("d").as("__old")),
+            Seq("node"), "left")
+          .filter(col("__old").isNull || col("d") < col("__old"))
+          .select(col("node"), col("d")),
+        "node")
+      ((minMerge(dist, improved, "d"), improved), nImp > 0)
+    }._1
   }
 
   /** Gaps-and-islands sessionization (the q47 shape as a reusable

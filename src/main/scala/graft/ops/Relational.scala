@@ -1614,11 +1614,12 @@ object Relational {
   }
 
   /** q119 — warm-start PageRank maintenance
-    * ([[graft.Graft.pageRankFrom]]): ranks converge 3 rounds on the
-    * STANDING graph (orders ending in 1–9), then a batch lands (the
-    * %10 orders' pairs) and ranks re-converge in 2 warm rounds from
-    * the standing fixed point instead of 3+ from cold — the
-    * incremental cadence production rank pipelines run on. The oracle
+    * ([[graft.Graft.pageRankRounds]] from a prior rank vector): ranks
+    * converge 3 rounds on the STANDING graph (orders ending in 1–9),
+    * then a batch lands (the %10 orders' pairs) and ranks
+    * re-converge in 2 warm rounds from the standing fixed point
+    * instead of 3+ from cold — the incremental cadence production
+    * rank pipelines run on. The oracle
     * unrolls ALL FIVE rounds as integer CTEs (3 standing + the
     * warm-start join + 2 rounds on the merged graph), so the gate
     * pins the warm-start semantics exactly — new nodes cold at 1e9,
@@ -1627,16 +1628,15 @@ object Relational {
   def q119IncPageRank(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // ONE pairFlags-rooted, src-partitioned edge checkpoint serves
-    // BOTH graphs (r21; was: a pair-sized checkpoint that each rank
-    // call re-unioned and re-shuffled into its own private edge
-    // checkpoint): every symmetrized edge carries the standing flag
+    // BOTH graphs, not a pair-sized checkpoint that each rank call
+    // re-unions and re-shuffles into its own private edge
+    // checkpoint: every symmetrized edge carries the standing flag
     // (any non-%10 order sources its pair), the standing edge set is
     // a partitioning-PRESERVING filter over the materialized
     // checkpoint, and both rank calls enter through the
     // prepared-edges seam ([[graft.Graft.pageRankRounds]]) so neither
     // re-materializes an edge list — at 100 TB the lineitem-sized
     // distinct and the edge shuffle happen once, not per graph.
-    val nPart = s.sessionState.conf.numShufflePartitions
     val pairFlags = Tables(s, dir, "lineitem")
       .groupBy($"l_partkey", $"l_suppkey")
       .agg(max(when($"l_orderkey" % 10 =!= 0, 1).otherwise(0)).as("st"))
@@ -1645,7 +1645,7 @@ object Relational {
     val flagged = org.apache.spark.sql.graftshim.PartitionedCheckpoint
       .localCheckpointHashPartitioned(
         fwd.unionAll(fwd.select($"dst".as("src"), $"src".as("dst"), $"st")),
-        nPart, "src")
+        "src")
     val standing = flagged.filter($"st" === 1).select($"src", $"dst")
     val all = flagged.select($"src", $"dst")
     val r3 = graft.Graft.pageRankRounds(standing, None,

@@ -19,7 +19,7 @@ object JobCount {
       if (args.length >= 2) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     val names = args.last.split(",").map(_.trim).filter(_.nonEmpty)
-    val spark = graft.Session.graft(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+    val spark = graft.Session.graft(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     val jobs = new AtomicInteger(0)
     val stages = new AtomicInteger(0)

@@ -957,14 +957,16 @@ class GraftFacadeSpec extends SparkSuiteBase {
       "center of the path outranks the symmetric endpoints")
   }
 
-  test("pageRank/pageRankFrom: invalid arguments fail before any job is dispatched") {
-    // the wrappers' eager edge checkpoint is a job; validation runs first
+  test("pageRank/pageRankRounds: invalid arguments fail before any job is dispatched") {
+    // pageRank's eager edge checkpoint and pageRankRounds' degree
+    // checkpoint are jobs; validation runs first
     val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")
     val init = Seq(("a", 1000000000L)).toDF("node", "rank_e9")
     val (_, groups) = jobGroupsDuring {
       intercept[IllegalArgumentException](Graft.pageRank(edges, iters = 0))
       intercept[IllegalArgumentException](Graft.pageRank(edges, dampingPct = 101))
-      intercept[IllegalArgumentException](Graft.pageRankFrom(edges, init, iters = 0))
+      intercept[IllegalArgumentException](
+        Graft.pageRankRounds(edges, Some(init), iters = 0, dampingPct = 85))
     }
     assert(groups.isEmpty, s"${groups.size} job(s) ran before validation")
   }
@@ -1023,6 +1025,50 @@ class GraftFacadeSpec extends SparkSuiteBase {
     val iso = Graft.bfsHops(edges, Seq(99L).toDF("node"), maxHops = 3)
       .as[(Long, Long)].collect().toMap
     assert(iso == Map(99L -> 0L))
+  }
+
+  test("graph loops: jobs dispatched per operator, build plus collect, are pinned") {
+    // triangle 1-2-3 with a tail 3-4-5-6, symmetrized: BFS and frontier
+    // SSSP exhaust before their bound, the 2-core peels three rounds
+    // then stops on an unchanged count, and the iteration counts reach
+    // every loop's sever cadence (4, 1 or 2 rounds)
+    val und = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L))
+    val edges = (und ++ und.map(_.swap))
+      .map { case (a, b) => (a, b, (a + b) % 3 + 1, a * b % 7) }
+      .toDF("src", "dst", "w", "t")
+    val seeds = Seq(1L).toDF("node")
+    def jobs(op: => org.apache.spark.sql.DataFrame): Int =
+      jobGroupsDuring(op.collect())._2.size
+    val got = Seq(
+      "pageRank" -> jobs(Graft.pageRank(edges, iters = 5)),
+      "personalizedPageRank" -> jobs(Graft.personalizedPageRank(edges, seeds, iters = 5)),
+      "labelPropagation" -> jobs(Graft.labelPropagation(edges, iters = 3)),
+      "kCore" -> jobs(Graft.kCore(edges, k = 2)),
+      "hits" -> jobs(Graft.hits(edges, iters = 5)),
+      "bfsHops" -> jobs(Graft.bfsHops(edges, seeds, maxHops = 8)),
+      "temporalReach" -> jobs(Graft.temporalReach(edges, seeds, 0L, iters = 3)),
+      "shortestPaths" -> jobs(Graft.shortestPaths(edges, seeds, iters = 3)),
+      "shortestPaths frontier" ->
+        jobs(Graft.shortestPaths(edges, seeds, iters = 8, frontier = true)))
+    // no other spec counts the loops' jobs: a change to the loop
+    // family that means to keep its plans must keep these numbers
+    assert(got == Seq("pageRank" -> 12, "personalizedPageRank" -> 18,
+      "labelPropagation" -> 12, "kCore" -> 13, "hits" -> 53, "bfsHops" -> 15,
+      "temporalReach" -> 10, "shortestPaths" -> 10,
+      "shortestPaths frontier" -> 17), got)
+  }
+
+  test("seeded graph ops: zero-column seeds fail before any job is dispatched") {
+    val edges = Seq((1L, 2L, 1L, 1L), (2L, 1L, 1L, 1L)).toDF("src", "dst", "w", "t")
+    val noColumns = spark.emptyDataFrame
+    val (_, groups) = jobGroupsDuring {
+      intercept[IllegalArgumentException](Graft.personalizedPageRank(edges, noColumns))
+      intercept[IllegalArgumentException](Graft.bfsHops(edges, noColumns, maxHops = 3))
+      intercept[IllegalArgumentException](
+        Graft.temporalReach(edges, noColumns, 0L, iters = 3))
+      intercept[IllegalArgumentException](Graft.shortestPaths(edges, noColumns, iters = 3))
+    }
+    assert(groups.isEmpty, s"${groups.size} job(s) ran before validation")
   }
 
   test("sStem: the three Harman rules, their exceptions, and edge lengths") {
@@ -1501,15 +1547,15 @@ class GraftFacadeSpec extends SparkSuiteBase {
     assert(plain.queryExecution.executedPlan.outputPartitioning.toString
       .contains("UnknownPartitioning"),
       "plain localCheckpoint now preserves partitioning — " +
-        "checkpointOn may be droppable (re-measure)")
+        "the declaring checkpoint may be droppable (re-measure)")
     val e = org.apache.spark.sql.graftshim.PartitionedCheckpoint
-      .localCheckpointHashPartitioned(edges, nPart, "src")
+      .localCheckpointHashPartitioned(edges, "src")
     assert(e.queryExecution.executedPlan.outputPartitioning.toString
       .toLowerCase.startsWith("hashpartitioning"),
       e.queryExecution.executedPlan.outputPartitioning.toString)
     val nodes = org.apache.spark.sql.graftshim.PartitionedCheckpoint
       .localCheckpointHashPartitioned(
-        e.select($"src".as("node")).distinct(), nPart, "node")
+        e.select($"src".as("node")).distinct(), "node")
     // one severed round: edge-probe join on the declared keys must
     // plan NO exchange on either checkpointed side (the only exchange
     // allowed is the node-sized partial-agg fold)
@@ -1528,14 +1574,14 @@ class GraftFacadeSpec extends SparkSuiteBase {
 
   test("counted checkpoint returns the true row count; partitioning-preserving views elide re-partitioning") {
     // r21: the loops' convergence probes ride the eager checkpoint's
-    // own count (checkpointOnCounted) — the count must be the frame's
+    // own count (the counted checkpoint) — the count must be the frame's
     // exact row count, with the same partitioning declaration
     val nPart = spark.sessionState.conf.numShufflePartitions
     val edges = spark.range(0, 4000)
       .select(($"id" % 83).as("src"), ($"id" % 79).as("dst"),
         ($"id" % 3 === 0).cast("int").as("st"))
     val (ck, n) = org.apache.spark.sql.graftshim.PartitionedCheckpoint
-      .localCheckpointHashPartitionedCounted(edges, nPart, "src")
+      .localCheckpointHashPartitionedCounted(edges, "src")
     assert(n == 4000L, s"counted checkpoint reported $n rows")
     assert(n == ck.count())
     assert(ck.queryExecution.executedPlan.outputPartitioning.toString
@@ -1713,12 +1759,19 @@ class GraftFacadeSpec extends SparkSuiteBase {
       "a1" -> ((0L, 1000000L)), "a2" -> ((0L, 600000L))), got)
   }
 
-  test("pageRankFrom: warm start composes with the cold run; new nodes start cold") {
+  test("pageRankRounds: warm start composes with the cold run; new nodes start cold") {
+    // the warm-start path q119 runs: a src-partitioned edge checkpoint
+    // entered through pageRankRounds with a prior rank vector
+    def warmRounds(edges: org.apache.spark.sql.DataFrame,
+        prior: org.apache.spark.sql.DataFrame, iters: Int) =
+      Graft.pageRankRounds(
+        org.apache.spark.sql.graftshim.PartitionedCheckpoint
+          .localCheckpointHashPartitioned(edges, "src"),
+        Some(prior), iters, dampingPct = 85)
     val edges = Seq(("a", "b"), ("b", "a"), ("b", "c"), ("c", "b"))
       .toDF("src", "dst")
     // 1 warm round from the 2-round fixed point == 3 cold rounds
-    val warm = Graft.pageRankFrom(edges,
-        Graft.pageRank(edges, iters = 2), iters = 1)
+    val warm = warmRounds(edges, Graft.pageRank(edges, iters = 2), iters = 1)
       .as[(String, Long)].collect().toMap
     val cold3 = Graft.pageRank(edges, iters = 3)
       .as[(String, Long)].collect().toMap
@@ -1728,8 +1781,7 @@ class GraftFacadeSpec extends SparkSuiteBase {
     val edges2 = edges.unionAll(Seq(("c", "d"), ("d", "c")).toDF("src", "dst"))
     val init = Graft.pageRank(edges, iters = 2)
       .as[(String, Long)].collect().toMap
-    val w2 = Graft.pageRankFrom(edges2,
-        Graft.pageRank(edges, iters = 2), iters = 1)
+    val w2 = warmRounds(edges2, Graft.pageRank(edges, iters = 2), iters = 1)
       .as[(String, Long)].collect().toMap
     assert(w2.keySet == Set("a", "b", "c", "d"))
     assert(w2("d") == 150000000L + 85L * (init("c") / 2) / 100L, w2)
