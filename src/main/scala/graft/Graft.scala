@@ -2222,6 +2222,18 @@ object Graft {
     * short-circuits the loop; its size is the row count the frontier's
     * eager checkpoint already computed, so the test costs no job.
     *
+    * Edge multiplicity: a repeated (src, dst) row cannot change a hop
+    * set, so pass raw edges; do not deduplicate them first. A
+    * `distinct()` there is an edge-sized aggregate and shuffle whose
+    * result the loop never reads (q73 builds its edges raw). Seeds
+    * need no `distinct()` either. [[shortestPaths]] (both modes) and
+    * [[temporalReach]] are multiplicity-free too, and [[triangles]]
+    * folds duplicates in its own adjacency build. The degree- and
+    * vote-weighted operators are not: [[pageRank]],
+    * [[personalizedPageRank]], [[labelPropagation]], [[kCore]] and
+    * [[hits]] count a parallel edge once per row, so their callers
+    * keep a `distinct()` when they mean a simple graph.
+    *
     * Failure type: `maxHops` out of range, or a `seeds` frame without
     * columns, throws `IllegalArgumentException` before any job. */
   def bfsHops(edges: DataFrame, seeds: DataFrame,
@@ -2276,6 +2288,11 @@ object Graft {
     * NODE-sized, min-folded partially map-side, and sever every 2
     * rounds. The time filter rides the join, so a round's shuffle
     * carries transmitting events only.
+    *
+    * Edge multiplicity: an arrival is a min over transmitting events,
+    * so a repeated event changes nothing; pass raw events, do not
+    * deduplicate them first (see [[bfsHops]] for the operators where
+    * multiplicity counts).
     *
     * Failure type: `iters` out of range, or a `seeds` frame without
     * columns, throws `IllegalArgumentException` before any job. A
@@ -2761,6 +2778,13 @@ object Graft {
     * driver holds nothing. Negative and NULL weights are rejected: with
     * nonnegative weights a bounded-round result is monotone in `iters`
     * and safe to read as "distance using <= iters hops".
+    *
+    * Edge multiplicity: both modes relax parallel edges to
+    * d(u) + min(w), so duplicate rows and heavier parallel copies give
+    * exactly the distances of the min-weight simple graph. Pass raw
+    * edges; do not deduplicate or `min(w)`-fold them first (q80 builds
+    * its edges raw; see [[bfsHops]] for the operators where
+    * multiplicity counts).
     *
     * Failure type: `iters` out of range, or a `seeds` frame without
     * columns, throws `IllegalArgumentException` before any job. A bad

@@ -6246,7 +6246,9 @@ FROM est ORDER BY l_partkey""",
 
     // q73: the 3 BFS hop levels unrolled as CTEs — frontier = distinct
     // neighbors minus visited, exactly the engine's set recurrence
-    // (NOT IN is null-safe here: node ids are never null).
+    // (NOT IN is null-safe here: node ids are never null). The DISTINCT
+    // edge pairs spell the simple graph; the engine passes raw lineitem
+    // edges, so a match certifies that duplicates change nothing.
     "q73_bfs_reach" ->
       """WITH pairs AS (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem),
         |edges AS (
@@ -6482,7 +6484,9 @@ FROM est ORDER BY l_partkey""",
 
     // q80: the 4 Bellman-Ford rounds unrolled as CTEs — integer cents
     // mins and sums only, so the match is exact (the q70 no-float
-    // argument).
+    // argument). The per-pair min(w) spells the min-weight graph; the
+    // engine passes one edge per lineitem, so a match certifies that
+    // relaxing parallel edges equals it.
     "q80_sssp" ->
       """WITH pw AS (SELECT l_partkey AS p, l_suppkey AS s2,
         |    CAST(min(CAST(round(l_extendedprice * 100) AS BIGINT))

@@ -8,6 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pruning + predicate pushdown for free; at cluster scale the same code
   * works over an object store (s3a/abfs) path. No caching here — each
   * query plans its own scan so `.explain` shows the real pushdown.
+  * Building a reader dispatches no Spark job: see [[read]].
   */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -29,7 +30,7 @@ object Tables {
       import org.apache.spark.sql.types.{LongType, TimestampNTZType,
         TimestampType}
       val raw =
-        try spark.read.parquet(s"$dir/$name.parquet")
+        try read(spark, s"$dir/$name.parquet")
         catch { case scala.util.control.NonFatal(e)
             if String.valueOf(e.getMessage).contains("TIMESTAMP(NANOS") =>
           // NANOS-encoded file read without the legacy flag: Spark's
@@ -56,12 +57,41 @@ object Tables {
               "(TIMESTAMP_MICROS, isAdjustedToUTC=0), and TIMESTAMP — a " +
               "regenerated events.parquet needs an explicit branch here")
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else read(spark, s"$dir/$name.parquet")
+
+  /** `spark.read.parquet(path)` without its schema-inference job. For a
+    * single file, the footer is read on the driver and converted with
+    * the session's own parquet settings (binaryAsString, int96,
+    * nanosAsLong, timestamp-NTZ inference), the same conversion
+    * Spark's inference job runs per footer, so the schema is the one
+    * inference would give; the read then takes it as given. That saves
+    * one Spark job per table per query build. A
+    * directory keeps `spark.read.parquet`, which also merges partition
+    * columns. A type the session cannot read (TIMESTAMP(NANOS) without
+    * nanosAsLong) throws from the conversion, as inference would. */
+  private[graft] def read(spark: SparkSession, path: String): DataFrame = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val p = new Path(path)
+    val hconf = spark.sessionState.newHadoopConf()
+    val status = p.getFileSystem(hconf).getFileStatus(p)
+    if (status.isDirectory) spark.read.parquet(path)
+    else {
+      val meta = ParquetFileReader.readFooter(hconf, status,
+        ParquetMetadataConverter.NO_FILTER)
+      val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(p, meta),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+      spark.read.schema(schema).parquet(path)
+    }
+  }
 
   /** Register harness tables as temp views (for spark.sql queries).
     * Idempotent. Views are lazy plans, but building one still reads the
-    * parquet footer for schema inference — callers on a hot path should
-    * pass only the tables their query touches instead of all ten. */
+    * parquet footer on the driver — callers on a hot path should pass
+    * only the tables their query touches instead of all ten. */
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")

@@ -1761,6 +1761,13 @@ object Relational {
     * long ids) is deterministic and any membership error hash-fails
     * the sum.
     *
+    * The edge list is [[q73Edges]]: one row per lineitem per
+    * direction, duplicates kept. A repeated edge cannot change a hop
+    * set, so deduplicating it first would buy nothing but a
+    * lineitem-sized aggregate. The oracle still spells the
+    * deduplicated graph (`SELECT DISTINCT`) and so certifies that the
+    * raw-edge plan equals it. Seeds are deduplicated by the operator.
+    *
     * Scale shape: per hop ONE edges⋈frontier hash join + distinct +
     * anti-join against the node-sized visited set — the classic
     * frontier BFS; the edge list localCheckpoints once (reused every
@@ -1769,18 +1776,24 @@ object Relational {
     * supplier 2k+1). */
   def q73BfsReach(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pairs = Tables(s, dir, "lineitem")
-      .select($"l_partkey", $"l_suppkey").distinct()
-    val fwd = pairs.select(
-      ($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
-    val edges = fwd.unionAll(fwd.select($"dst".as("src"), $"src".as("dst")))
-    val seeds = pairs.filter($"l_partkey" <= 3)
-      .select(($"l_partkey" * 2).as("node")).distinct()
-    graft.Graft.bfsHops(edges, seeds, maxHops = 3)
+    val seeds = Tables(s, dir, "lineitem").filter($"l_partkey" <= 3)
+      .select(($"l_partkey" * 2).as("node"))
+    graft.Graft.bfsHops(q73Edges(s, dir), seeds, maxHops = 3)
       .groupBy($"hop")
       .agg(count(lit(1)).as("n_nodes"), sum($"node").as("sum_node"),
         min($"node").as("min_node"), max($"node").as("max_node"))
       .orderBy($"hop")
+  }
+
+  /** q73's undirected part↔supplier edge list (`src`, `dst`): each
+    * lineitem row as a part → supplier and a supplier → part edge,
+    * with no aggregate, so building it is one scan and the operator's
+    * edge checkpoint is its only shuffle. */
+  private[graft] def q73Edges(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val fwd = Tables(s, dir, "lineitem").select(
+      ($"l_partkey" * 2).as("src"), ($"l_suppkey" * 2 + 1).as("dst"))
+    fwd.unionAll(fwd.select($"dst".as("src"), $"src".as("dst")))
   }
 
   /** q74 — equi-width histogram of l_extendedprice in 20 buckets, the
@@ -1982,26 +1995,39 @@ object Relational {
     * Bellman-Ford relaxation rounds from every 1000th part, reporting
     * the 100 cheapest reachable nodes. Integer-exact end to end
     * (cents sums and mins — the q70 no-float argument), so the
-    * 4-round unrolled CTE oracle must match to the cent. */
+    * 4-round unrolled CTE oracle must match to the cent.
+    *
+    * The edge list is [[q80Edges]]: every lineitem row is its own
+    * weighted edge, parallel edges kept. Relaxation takes the minimum
+    * over parallel edges (d(u) + min w), so the distances are those of
+    * the min-weight graph without a lineitem-sized `min(w)` aggregate
+    * first. The oracle keeps the per-pair `min(w)` and so certifies
+    * that the raw-edge plan equals it. */
   def q80Sssp(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val pw = Tables(s, dir, "lineitem")
-      .groupBy($"l_partkey", $"l_suppkey")
-      .agg(min(round($"l_extendedprice" * 100).cast("long")).as("w"))
-    val e = pw.select(($"l_partkey" * 2).as("src"),
-        ($"l_suppkey" * 2 + 1).as("dst"), $"w")
-      .unionAll(pw.select(($"l_suppkey" * 2 + 1).as("src"),
-        ($"l_partkey" * 2).as("dst"), $"w"))
     val seeds = Tables(s, dir, "part")
       .filter($"p_partkey" % 1000 === 1)
       .select(($"p_partkey" * 2).as("node"))
-    graft.Graft.shortestPaths(e, seeds, iters = 4)
+    graft.Graft.shortestPaths(q80Edges(s, dir), seeds, iters = 4)
       .select(
         when($"node" % 2 === 0, concat(lit("p:"), expr("node div 2")))
           .otherwise(concat(lit("s:"), expr("(node - 1) div 2")))
           .as("node"),
         $"d")
       .orderBy($"d", $"node").limit(100)
+  }
+
+  /** q80's weighted undirected edge list (`src`, `dst`, `w`): each
+    * lineitem row in both directions, weighted by its price in cents,
+    * with no aggregate, so building it is one scan and the operator's
+    * edge checkpoint is its only shuffle. */
+  private[graft] def q80Edges(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val li = Tables(s, dir, "lineitem").select(($"l_partkey" * 2).as("p"),
+      ($"l_suppkey" * 2 + 1).as("q"),
+      round($"l_extendedprice" * 100).cast("long").as("w"))
+    li.select($"p".as("src"), $"q".as("dst"), $"w")
+      .unionAll(li.select($"q".as("src"), $"p".as("dst"), $"w"))
   }
 
   /** q81 — event-sequence pattern matching

@@ -1027,6 +1027,39 @@ class GraftFacadeSpec extends SparkSuiteBase {
     assert(iso == Map(99L -> 0L))
   }
 
+  test("bfsHops, shortestPaths, temporalReach, triangles: duplicate edges never change the answer") {
+    // the simple graph: path 1-2-3-4-5, shortcut 1-3, triangle 1-2-3;
+    // the multigraph repeats every edge and adds a heavier parallel
+    // copy, and the seed repeats too. The copy keeps its event time: a
+    // later event is a new contact, not a duplicate, and can carry a
+    // later arrival to temporalReach
+    val und = Seq((1L, 2L, 5L, 3L), (2L, 3L, 1L, 4L), (1L, 3L, 9L, 6L),
+      (3L, 4L, 2L, 5L), (4L, 5L, 7L, 8L))
+    val simple = und ++ und.map { case (a, b, w, t) => (b, a, w, t) }
+    val multi = simple ++ simple ++
+      simple.map { case (a, b, w, t) => (a, b, w + 10L, t) }
+    def frame(es: Seq[(Long, Long, Long, Long)]) = es.toDF("src", "dst", "w", "t")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString(",")).sorted.toSeq
+    val seeds = Seq(1L, 1L).toDF("node")
+    val ops = Seq[(String, org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)](
+      "bfsHops" -> (Graft.bfsHops(_, seeds, maxHops = 3)),
+      "shortestPaths" -> (Graft.shortestPaths(_, seeds, iters = 4)),
+      "shortestPaths frontier" -> (Graft.shortestPaths(_, seeds, iters = 4, frontier = true)),
+      "temporalReach" -> (Graft.temporalReach(_, seeds, 0L, iters = 3)),
+      "triangles" -> (Graft.triangles(_)))
+    for ((name, op) <- ops) {
+      val want = rows(op(frame(simple)))
+      val got = rows(op(frame(multi)))
+      assert(want.nonEmpty && got == want, s"$name: multigraph $got, simple graph $want")
+    }
+    // and the simple-graph answers are the ones worked by hand
+    assert(rows(Graft.shortestPaths(frame(simple), Seq(1L).toDF("node"), iters = 4)) ==
+      Seq("1,0", "2,5", "3,6", "4,8", "5,15"))
+    assert(rows(Graft.bfsHops(frame(simple), Seq(1L).toDF("node"), maxHops = 3)) ==
+      Seq("1,0", "2,1", "3,1", "4,2", "5,3"))
+  }
+
   test("graph loops: jobs dispatched per operator, build plus collect, are pinned") {
     // triangle 1-2-3 with a tail 3-4-5-6, symmetrized: BFS and frontier
     // SSSP exhaust before their bound, the 2-core peels three rounds

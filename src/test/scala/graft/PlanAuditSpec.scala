@@ -135,6 +135,20 @@ class PlanAuditSpec extends SparkSuiteBase {
     }
   }
 
+  test("q73/q80 edge builders plan no aggregate: raw edges, no dedup") {
+    // BFS hop sets and min-fold distances cannot change when an edge
+    // repeats, so a distinct() or min(w) fold before the operator is a
+    // lineitem-sized shuffle the answer never reads
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    for ((name, edges) <- Seq(
+        "q73Edges" -> ops.Relational.q73Edges(spark, sf),
+        "q80Edges" -> ops.Relational.q80Edges(spark, sf))) {
+      val plan = edges.queryExecution.optimizedPlan
+      val aggs = plan.collect { case a: Aggregate => a }
+      assert(aggs.isEmpty, s"$name plans ${aggs.size} aggregate(s):\n$plan")
+    }
+  }
+
   test("no registered query window-functions over an UNPARTITIONED corpus-sized input") {
     // the recurring scale anti-pattern (sequenceGaps grew recursive
     // bucketing to kill it): a Window with an empty partition spec

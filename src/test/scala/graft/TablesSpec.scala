@@ -11,6 +11,8 @@ import org.apache.spark.sql.types.TimestampType
 class TablesSpec extends SparkSuiteBase {
 
   private val sf = "/root/testdata/sf0.01"
+  private val allSfs = Seq("sf0.001", "sf0.01", "sf0.1")
+    .map(n => s"${new java.io.File(sf).getParent}/$n")
 
   test("every harness table reads and is non-empty at sf0.01") {
     val counts = Tables.names.map { n =>
@@ -32,7 +34,7 @@ class TablesSpec extends SparkSuiteBase {
     // TIMESTAMP_MICROS/NTZ (round 9+) — the Tables reader must surface
     // exactly TimestampType. A future testdata regeneration then flips
     // this one test, not 15 queries.
-    for (dir <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")) {
+    for (dir <- allSfs) {
       val dt = Tables(spark, dir, "events").schema("ts").dataType
       assert(dt == TimestampType, s"$dir/events.parquet: ts read as $dt")
     }
@@ -73,6 +75,54 @@ class TablesSpec extends SparkSuiteBase {
       }
     }
     assert(drift.isEmpty, "harness table schema drift:\n" + drift.mkString("\n"))
+  }
+
+  test("building a harness table reader dispatches no Spark job") {
+    // spark.read.parquet infers a file's schema with a job of its own;
+    // the reader takes the footer's schema on the driver instead, so a
+    // query's build pays no job per table it reads
+    val (_, jobs) = jobGroupsDuring(
+      for (dir <- allSfs; n <- Tables.names) Tables(spark, dir, n))
+    assert(jobs.isEmpty, s"${jobs.size} job(s) while building " +
+      s"${allSfs.size * Tables.names.size} readers")
+  }
+
+  test("the footer schema equals the schema Spark's inference gives") {
+    val diff = for {
+      dir <- allSfs; n <- Tables.names
+      p = s"$dir/$n.parquet"
+      got = Tables.read(spark, p).schema
+      want = spark.read.parquet(p).schema
+      if got != want
+    } yield s"$p:\n  footer:    ${got.treeString}\n  inference: ${want.treeString}"
+    assert(diff.isEmpty, diff.mkString("\n"))
+  }
+
+  test("events reader on real TIMESTAMP(NANOS): longs under nanosAsLong, a named error without") {
+    // the rounds-<=8 physical encoding, written with parquet's own
+    // writer (Spark cannot write nanos): the footer conversion must
+    // honor the session's nanosAsLong exactly as inference does
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val dir = java.nio.file.Files.createTempDirectory("graft-events-nanos-raw").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 ts (TIMESTAMP(NANOS,true)); " +
+        "required int64 user_id; }")
+    val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("ts", 1704103200123456789L).append("user_id", 7L))
+    finally w.close()
+    val df = Tables(spark, dir, "events")
+    assert(df.schema("ts").dataType == TimestampType)
+    val ts = df.selectExpr("cast(ts as string)").head().getString(0)
+    assert(ts == "2024-01-01 10:00:00.123456", s"nanos shim produced $ts")
+    val strict = spark.newSession()
+    strict.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val e = intercept[IllegalStateException](Tables(strict, dir, "events"))
+    assert(e.getMessage.contains("nanosAsLong=true"), s"wrong error: ${e.getMessage}")
   }
 
   test("the driver's flagship entry() returns rows") {

@@ -22,6 +22,12 @@
 # (quartiles by linear interpolation), the change's median relative to
 # the base's, and the number of those pairs in which the change read
 # lower.
+#
+# Last, it runs each side once more with `--trace 1` at first-seed and
+# prints base -> change for the counters host load cannot move: Spark
+# jobs, stages and tasks, shuffle bytes written and records, and cache
+# bytes written. Those runs are kept as
+# $AB_DIR/<side>.<workload>.<first-seed>.trace.json.
 set -euo pipefail
 rev=${1:?usage: $0 <rev> <workload> <first-seed> <pairs> [seconds]}
 workload=${2:?workload}
@@ -89,4 +95,27 @@ for k in (runs[0][0] if runs else {}):
     rel = f"{statistics.median(c) / mb - 1:+.1%}" if mb else "n/a"
     lower = sum(y < x for x, y in zip(b, c))
     print(f"{k}: base {spread(b)} | change {spread(c)} | {rel} | {lower}/{len(runs)}")
+EOF
+for side in base change; do
+  (cd "$dir/$side" && python3 perfbench/run.py --workload "$workload" \
+    --seed "$first" --seconds "$secs" --trace 1 2>/dev/null | tail -1) \
+    > "$dir/$side.$workload.$first.trace.json" || true
+done
+python3 - "$dir" "$workload" "$first" <<'EOF'
+import json, sys
+d, workload, seed = sys.argv[1], sys.argv[2], sys.argv[3]
+sides = []
+for side in ("base", "change"):
+    try:
+        with open(f"{d}/{side}.{workload}.{seed}.trace.json") as f:
+            sides.append(json.loads(f.read())["metrics"])
+    except (OSError, ValueError, KeyError):
+        sides.append({})
+print(f"# counters, one --trace 1 run per side at seed {seed}: base -> change")
+for k in ("sched.jobs", "sched.stages", "sched.tasks", "shuffle.write_bytes",
+          "shuffle.records", "cache.bytes_written"):
+    b, c = (m[k]["value"] if k in m else None for m in sides)
+    fmt = lambda v: "n/a" if v is None else f"{v:.0f}"
+    delta = "" if b is None or c is None else f" ({c - b:+.0f})"
+    print(f"{k}: {fmt(b)} -> {fmt(c)}{delta}")
 EOF
