@@ -238,23 +238,18 @@ object Bench {
     // Streaming machinery warmup (same rationale as the operator warmup
     // above): the FIRST streaming query in a JVM pays state-store +
     // micro-batch-engine + streaming-codegen init measured at ~2.5s.
-    // Three synthetic rows through a windowed agg touch all of it; no
-    // harness table is pre-aggregated.
+    // Three synthetic rows, one micro-batch, through a windowed agg
+    // touch all of it; no harness table is pre-aggregated.
     warm("streaming") {
       import spark.implicits._
-      implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-      val ms = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[(java.sql.Timestamp, String, Double)]
-      val q = graft.streaming.Streams.tumblingCounts(
-          ms.toDF().toDF("ts", "event_type", "value"))
-        .writeStream.format("memory").queryName("graft_warmup_stream")
-        .outputMode("complete").start()
-      try {
-        ms.addData((java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), "a", 1.0),
-          (java.sql.Timestamp.valueOf("2024-01-01 10:05:00"), "a", 2.0),
-          (java.sql.Timestamp.valueOf("2024-01-01 11:00:00"), "b", 3.0))
-        q.processAllAvailable()
-      } finally q.stop()
+      val rows = Seq(("2024-01-01 10:00:00", "a", 1.0),
+          ("2024-01-01 10:05:00", "a", 2.0), ("2024-01-01 11:00:00", "b", 3.0))
+        .map { case (t, e, v) => (java.sql.Timestamp.valueOf(t), e, v) }
+      graft.streaming.Streams.replay(spark, rows,
+          org.apache.spark.sql.streaming.OutputMode.Complete(), "warmup",
+          nChunks = 1) { ds =>
+        graft.streaming.Streams.tumblingCounts(ds.toDF("ts", "event_type", "value"))
+      }: Unit
     }
     // Optional comma-separated query-name filter for focused timing runs
     // while iterating (full bench when unset — the driver's mode).

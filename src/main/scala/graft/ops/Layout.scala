@@ -75,7 +75,7 @@ object Layout {
   /** Best-effort recursive delete: a sweep must never break a build,
     * and a file another process still holds open just survives to the
     * next sweep. */
-  private def rmQuiet(root: java.io.File): Unit =
+  private[graft] def rmQuiet(root: java.io.File): Unit =
     try {
       def rm(f: java.io.File): Unit = {
         if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 import graft.Tables
 
 /** Structured Streaming surface (SURVEY.md §2b "streaming"; the
@@ -382,12 +382,14 @@ object Streams {
 
   private val replayRuns = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  /** The shared MemoryStream replay harness behind st03/st05–st08:
-    * feed a driver-collected, deterministically ordered slice through
-    * a real streaming query in
-    * `nChunks` micro-batches (`processAllAvailable` per chunk forces a
-    * real trigger each — cross-trigger state survival is the property
-    * under test) and return the memory sink's final table.
+  /** The one micro-batch feed loop behind every MemoryStream replay
+    * ([[replay]], [[feedBatches]], Bench's streaming warmup): `start`
+    * turns the stream into a running query, then `data` arrives in
+    * ceil(n / `nChunks`)-row chunks, each one `addData` plus one
+    * `processAllAvailable` — a real trigger per chunk, so cross-trigger
+    * state survival is what the callers exercise. Returns the chunks
+    * it delivered, in order: the exactly-once maintainers re-deliver
+    * the last one with its batch id.
     *
     * Shared decisions, made once here:
     * - CLONED session (same SparkContext, own SQLConf) with state
@@ -405,37 +407,76 @@ object Streams {
     *   finalizes only when the watermark advances, which after the
     *   last data batch happens only in a no-data batch — opts back in
     *   via `noData = true` (st09).
-    * - Unique sink name per run: Bench and Verify may both invoke a
-    *   query in one session, and a memory sink table outlives its
-    *   query.
+    * - The query stops in `finally`: a failing batch surfaces as the
+    *   `processAllAvailable` error and leaves no query running.
     *
     * The driver-side collect feeding `data` is the REPLAY HARNESS, not
     * the operator: MemoryStream is fed (and row-encoded) from the
     * driver by design, so replay volume is a pure harness tax and the
     * callers take a deterministic 1-in-10 user slice (mirrored in
     * their oracles). Production code readStreams from a real source. */
-  private[graft] def replay[T: org.apache.spark.sql.Encoder](
-      s: SparkSession, data: Seq[T], mode: OutputMode, sink: String,
-      nChunks: Int = 2, noData: Boolean = false,
+  private[graft] def feed[T: Encoder](s: SparkSession, data: Seq[T],
+      nChunks: Int, noData: Boolean = false,
       confs: Seq[(String, String)] = Nil)(
-      build: Dataset[T] => DataFrame): DataFrame = {
+      start: Dataset[T] => StreamingQuery): Seq[Seq[T]] = {
     val s2 = s.newSession()
     s2.conf.set("spark.sql.shuffle.partitions", "4")
     s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noData.toString)
     confs.foreach { case (k, v) => s2.conf.set(k, v) }
     val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[T](
-      implicitly[org.apache.spark.sql.Encoder[T]], s2.sqlContext)
-    val name = s"graft_${sink}_sink_${replayRuns.incrementAndGet()}"
-    val q = build(in.toDS()).writeStream.format("memory").queryName(name)
-      .outputMode(mode).start()
-    try {
-      val chunk = math.max(1, (data.length + nChunks - 1) / nChunks)
-      data.grouped(chunk).foreach { c =>
-        in.addData(c: _*)
-        q.processAllAvailable()
-      }
+      implicitly[Encoder[T]], s2.sqlContext)
+    val chunks = data.grouped(math.max(1, (data.length + nChunks - 1) / nChunks)).toSeq
+    val q = start(in.toDS())
+    try chunks.foreach { c =>
+      in.addData(c: _*)
+      q.processAllAvailable()
     } finally q.stop()
+    chunks
+  }
+
+  /** [[feed]] into a memory sink, returning the sink's final table —
+    * the replay behind st03/st05–st10 and the other sink-read stream
+    * queries. The table is read in the replay's own session, so a
+    * caller's `orderBy` on it plans with that session's 4 shuffle
+    * partitions. Unique sink name per run: Bench and Verify may both
+    * invoke a query in one session, and a memory sink table outlives
+    * its query. */
+  private[graft] def replay[T: Encoder](
+      s: SparkSession, data: Seq[T], mode: OutputMode, sink: String,
+      nChunks: Int = 2, noData: Boolean = false,
+      confs: Seq[(String, String)] = Nil)(
+      build: Dataset[T] => DataFrame): DataFrame = {
+    val name = s"graft_${sink}_sink_${replayRuns.incrementAndGet()}"
+    var s2: SparkSession = null
+    feed(s, data, nChunks, noData, confs) { ds =>
+      s2 = ds.sparkSession
+      build(ds).writeStream.format("memory").queryName(name)
+        .outputMode(mode).start()
+    }
     s2.table(name)
+  }
+
+  /** [[feed]] into a `foreachBatch` body, with `data`'s columns named
+    * `cols`: the sink shape of the at-rest maintainers (st11, st19,
+    * st22, st23, st27–st31). A stateless append stream — the state
+    * lives in the sink, so no-data batches would have nothing to do. */
+  private[graft] def feedBatches[T: Encoder](s: SparkSession, data: Seq[T],
+      nChunks: Int, cols: String*)(
+      body: (DataFrame, Long) => Unit): Seq[Seq[T]] =
+    feed(s, data, nChunks) { ds =>
+      ds.toDF(cols: _*).writeStream.foreachBatch(body)
+        .outputMode(OutputMode.Append).start()
+    }
+
+  /** Run `body` over a fresh per-run scratch directory (`prefix` plus
+    * a random suffix under `java.io.tmpdir`), checkpoint the frame it
+    * returns, and delete the directory whether or not `body` succeeds:
+    * the checkpoint owns the data, so nothing outlives the call. */
+  private[graft] def withScratch(prefix: String)(
+      body: java.io.File => DataFrame): DataFrame = {
+    val root = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(root).localCheckpoint(true)
+    finally graft.ops.Layout.rmQuiet(root)
   }
 
   /** st03 — the GENUINELY INCREMENTAL streaming path, driver-visible:
@@ -756,10 +797,12 @@ object Streams {
     * incrementally: the 1-in-10-user slice replays through a real
     * streaming query whose sink is [[graft.Graft.upsertLatest]] — each
     * micro-batch MERGEs into a keyed latest-state table (one row per
-    * user, latest event by (ts, event_id)) with an A/B generation
-    * flip over parquet (write the merged table to a NEW directory,
-    * advance the pointer — never read and overwrite one path in the
-    * same job). This is the materialized-view maintenance shape every
+    * user, latest event by (ts, event_id)) through [[SketchMaintainer]]'s
+    * A/B generation flip over parquet (write the merged table to a NEW
+    * directory, advance the pointer — never read and overwrite one path
+    * in the same job): the batch's own latest-per-user is the delta,
+    * and merging it into the standing table is the same upsert. This
+    * is the materialized-view maintenance shape every
     * CDC/feature-store pipeline runs; production swaps the flip for a
     * Delta/Iceberg MERGE, the merge itself is unchanged.
     *
@@ -768,11 +811,13 @@ object Streams {
     * arrival order never decides), so the final generation equals the
     * batch "latest row per user" the DuckDB oracle spells, for ANY
     * chunking. Idempotence under batch re-delivery is asserted in
-    * StreamsSpec. Stateless stream (no watermark/state store — the
-    * state lives in the SINK), so no-data batches have nothing to do.
-    * Eager by design like st03 (the sink must be populated before the
-    * returned frame exists); the result is checkpointed and the
-    * generation directories deleted before returning. */
+    * StreamsSpec, and the maintainer's batchId gate no-ops a
+    * re-delivered batch outright. Stateless stream (no watermark/state
+    * store — the state lives in the SINK), so no-data batches have
+    * nothing to do. Eager by design like st03 (the sink must be
+    * populated before the returned frame exists); the generations live
+    * in a [[withScratch]] directory, deleted once the result is
+    * checkpointed. */
   def st11ForeachBatchUpsert(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val data = Tables(s, dir, "events")
@@ -781,50 +826,18 @@ object Streams {
       .orderBy($"ts", $"event_id")
       .as[(Long, Long, java.sql.Timestamp, String, Double)]
       .collect()
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      (Long, Long, java.sql.Timestamp, String, Double)](
-      implicitly[org.apache.spark.sql.Encoder[
-        (Long, Long, java.sql.Timestamp, String, Double)]], s2.sqlContext)
-    val root = java.nio.file.Files.createTempDirectory("graft_st11_").toFile
-    @volatile var cur: Option[String] = None
-    val gen = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = in.toDS().toDF("event_id", "user_id", "ts", "event_type", "value")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val target = cur.map(p => batch.sparkSession.read.parquet(p))
-        val merged = graft.Graft.upsertLatest(target, batch,
-          "user_id", Seq("ts", "event_id"))
-        val next = new java.io.File(root, s"gen${gen.incrementAndGet()}").getPath
-        merged.write.mode("overwrite").parquet(next)
-        cur = Some(next)
-        ()
-      }
-      .outputMode(OutputMode.Append)
-      .start()
-    try {
-      val chunk = math.max(1, (data.length + 2) / 3)
-      data.grouped(chunk).foreach { c =>
-        in.addData(c.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val out = s.read.parquet(cur.getOrElse(
-        throw new IllegalStateException("st11: no batch ever committed")))
-      .select($"user_id", $"event_id", $"event_type",
-        round($"value", 2).as("value"))
-      .orderBy($"user_id")
-      .localCheckpoint(true)
-    // the generations are harness scratch; the checkpoint above owns
-    // the data now
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
+    def upsert(target: Option[DataFrame], batch: DataFrame): DataFrame =
+      graft.Graft.upsertLatest(target, batch, "user_id", Seq("ts", "event_id"))
+    withScratch("graft_st11_") { root =>
+      val m = new SketchMaintainer(root, upsert(None, _),
+        (prev, d) => upsert(Some(prev), d))
+      feedBatches(s, data.toSeq, 3,
+        "event_id", "user_id", "ts", "event_type", "value")(m.apply)
+      s.read.parquet(m.currentPath)
+        .select($"user_id", $"event_id", $"event_type",
+          round($"value", 2).as("value"))
+        .orderBy($"user_id")
     }
-    rm(root)
-    out
   }
 
   /** st13 — SESSION windows run genuinely incrementally: the
@@ -1255,28 +1268,9 @@ object Streams {
         .select($"c".as("id_a"), ($"c" + 10).as("id_b")))
       .orderBy($"id_a", $"id_b")
       .as[(Long, Long)].collect()
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      (Long, Long)](
-      implicitly[org.apache.spark.sql.Encoder[(Long, Long)]], s2.sqlContext)
-    val q = in.toDS().toDF("id_a", "id_b")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.Graft.componentsIncremental(
-          batch.sparkSession, path, batch): Unit
-        ()
-      }
-      .outputMode(OutputMode.Append)
-      .start()
-    try {
-      val chunk = math.max(1, (data.length + 2) / 3)
-      data.grouped(chunk).foreach { c =>
-        in.addData(c.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    feedBatches(s, data.toSeq, 3, "id_a", "id_b") { (batch, _) =>
+      graft.Graft.componentsIncremental(batch.sparkSession, path, batch): Unit
+    }
     graft.Graft.componentsRead(s, path)
       .select($"id".as("node_id"), $"root".as("component_id"))
       .orderBy($"node_id")
@@ -1300,8 +1294,9 @@ object Streams {
     * batch-sized shingling, one capped bucket-pruned probe, one new
     * file per touched gram bucket; the standing lake is never
     * re-shingled. Per-batch reports land in a parquet staging sink
-    * (a distributed append — no driver gather of results); the
-    * returned frame is one read of it.
+    * (a distributed append — no driver gather of results) in a
+    * [[withScratch]] directory; the returned frame is one checkpointed
+    * read of it, so the directory is gone when the builder returns.
     *
     * The index copy (tag `sub_stream`) RESETS to its base snapshot
     * every invocation: gram appends are not idempotent (contrast
@@ -1416,47 +1411,27 @@ object Streams {
       lfs.writeText(manifest, fileKeys().mkString("\n"))
       graft.internal.LayoutFs.touchMarker(s, path, "_BASE_DONE")
     }
-    val outPath = java.nio.file.Files
-      .createTempDirectory("graft-st28-out").toString + "/runs"
     val data = docs.filter($"doc_id" % 5 === 4)
       .select($"doc_id", $"text")
       .orderBy($"doc_id")
       .as[(Long, String)].collect()
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      (Long, String)](
-      implicitly[org.apache.spark.sql.Encoder[(Long, String)]], s2.sqlContext)
-    val q = in.toDS().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        st28ApplyBatch(path, outPath, batch, batchId)
-      }
-      .outputMode(OutputMode.Append)
-      .start()
-    val chunks = {
+    // the run reports are per-run scratch, checkpointed before the
+    // directory goes (one scan job; the sort stays lazy)
+    withScratch("graft-st28-out") { tmp =>
+      val outPath = new java.io.File(tmp, "runs").getPath
       // 2 chunks exercise both pair routes (same-batch self-pair,
       // cross-batch index probe); the replay helper's shared default
-      val chunk = math.max(1, (data.length + 1) / 2)
-      data.grouped(chunk).toSeq
-    }
-    try {
-      chunks.foreach { c =>
-        in.addData(c.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    // re-deliver the final micro-batch with its original batchId (the
-    // checkpointed-source retry); the gate must no-op it — a blind
-    // re-run would duplicate the report rows AND the index grams, and
-    // the oracle below would hash-fail on the doubled runs (the st29
-    // discipline: exactly-once proven in the gated answer itself)
-    st28ApplyBatch(path, outPath,
-      chunks.last.toSeq.toDF("doc_id", "text"),
-      (chunks.length - 1).toLong)
-    s.read.parquet(outPath)
-      .orderBy($"id_a", $"id_b", $"start_a", $"start_b")
+      val chunks = feedBatches(s, data.toSeq, 2, "doc_id", "text")(
+        st28ApplyBatch(path, outPath, _, _))
+      // re-deliver the final micro-batch with its original batchId (the
+      // checkpointed-source retry); the gate must no-op it — a blind
+      // re-run would duplicate the report rows AND the index grams, and
+      // the oracle below would hash-fail on the doubled runs (the st29
+      // discipline: exactly-once proven in the gated answer itself)
+      st28ApplyBatch(path, outPath, chunks.last.toDF("doc_id", "text"),
+        (chunks.length - 1).toLong)
+      s.read.parquet(outPath)
+    }.orderBy($"id_a", $"id_b", $"start_a", $"start_b")
   }
 
   /** st29's per-batch maintenance body, EXACTLY-ONCE gated — and
@@ -1532,39 +1507,16 @@ object Streams {
     val data = emb.filter($"vec_id" % 10 === 7)
       .orderBy($"vec_id")
       .as[(Long, Array[Float])].collect()
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      (Long, Array[Float])](
-      implicitly[org.apache.spark.sql.Encoder[(Long, Array[Float])]],
-      s2.sqlContext)
-    val q = in.toDS().toDF("vec_id", "embedding")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        st29ApplyBatch(path, centRows, batch, batchId)
-      }
-      .outputMode(OutputMode.Append)
-      .start()
-    val chunks = {
-      val chunk = math.max(1, (data.length + 1) / 2)
-      data.grouped(chunk).toSeq
-    }
-    try {
-      // 2 chunks: a same-batch and a cross-batch append both occur
-      chunks.foreach { c =>
-        in.addData(c.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    // 2 chunks: a same-batch and a cross-batch append both occur
+    val chunks = feedBatches(s, data.toSeq, 2, "vec_id", "embedding")(
+      st29ApplyBatch(path, centRows, _, _))
     // RE-DELIVER the final micro-batch through the same body with its
     // original batchId — the retry a checkpointed source performs
     // after a sink-side failure. The BatchIdJournal gate must no-op
     // it; a double-append would put duplicate postings in the probed
     // cells and the oracle-gated search below would hash-fail. This
     // makes exactly-once an ORACLE-GATED property, not only a spec.
-    st29ApplyBatch(path, centRows,
-      chunks.last.toSeq.toDF("vec_id", "embedding"),
+    st29ApplyBatch(path, centRows, chunks.last.toDF("vec_id", "embedding"),
       (chunks.length - 1).toLong)
     graft.ops.Similarity.ivfSearchAt(s, dir, path)
   }
@@ -1628,32 +1580,11 @@ object Streams {
     val data = graft.ops.Similarity.purgeRequests(s, dir)
       .orderBy($"vec_id").as[(Long, Int)].collect()
     require(data.nonEmpty, s"st30: empty purge request set in $dir")
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      (Long, Int)](
-      implicitly[org.apache.spark.sql.Encoder[(Long, Int)]], s2.sqlContext)
-    val q = in.toDS().toDF("vec_id", "sig")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        st30ApplyBatch(path, batch, batchId)
-      }
-      .outputMode(OutputMode.Append)
-      .start()
-    val chunks = {
-      val chunk = math.max(1, (data.length + 1) / 2)
-      data.grouped(chunk).toSeq
-    }
-    try {
-      chunks.foreach { c =>
-        in.addData(c.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    val chunks = feedBatches(s, data.toSeq, 2, "vec_id", "sig")(
+      st30ApplyBatch(path, _, _))
     // the checkpointed-source retry: re-deliver the final batch; the
     // gate must no-op it or the ledger check below fails
-    st30ApplyBatch(path, chunks.last.toSeq.toDF("vec_id", "sig"),
+    st30ApplyBatch(path, chunks.last.toDF("vec_id", "sig"),
       (chunks.length - 1).toLong)
     val ledger = s.read.parquet(path + "/_tombstones").count()
     require(ledger == data.length,
@@ -1765,35 +1696,14 @@ object Streams {
       .orderBy($"doc_id")
       .as[(Long, String)].collect()
     require(data.nonEmpty, s"st31: empty document slice in $dir")
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      (Long, String)](
-      implicitly[org.apache.spark.sql.Encoder[(Long, String)]], s2.sqlContext)
-    val q = in.toDS().toDF("doc_id", "text")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        st31ApplyBatch(path, batch, batchId)
-      }
-      .outputMode(OutputMode.Append)
-      .start()
-    val chunks = {
-      // 2 chunks: the second batch's placement depends on the cursor
-      // the first advanced — the cross-batch concatenation state
-      val chunk = math.max(1, (data.length + 1) / 2)
-      data.grouped(chunk).toSeq
-    }
-    try {
-      chunks.foreach { c =>
-        in.addData(c.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
+    // 2 chunks: the second batch's placement depends on the cursor
+    // the first advanced — the cross-batch concatenation state
+    val chunks = feedBatches(s, data.toSeq, 2, "doc_id", "text")(
+      st31ApplyBatch(path, _, _))
     // the checkpointed-source retry: re-deliver the final batch with
     // its original id; the atomic gate must no-op it or the placements
     // duplicate AND the cursor double-advances
-    st31ApplyBatch(path, chunks.last.toSeq.toDF("doc_id", "text"),
+    st31ApplyBatch(path, chunks.last.toDF("doc_id", "text"),
       (chunks.length - 1).toLong)
     // ledger checks, both loud BEFORE the oracle sees the rows: a
     // blind re-append would duplicate placement rows (count check —
@@ -2096,8 +2006,9 @@ object Streams {
     * q91/q93 mirror). Stateless stream (state lives in the sink), so
     * no-data batches have nothing to do. Eager by design like
     * st11. */
-  /** Standing-sketch-table maintainer shared by st19 (HDR) and st22
-    * (HLL): per micro-batch, fold the batch to a delta sketch, merge
+  /** Standing-sketch-table maintainer shared by st11 (latest row per
+    * key), st19 (HDR), st22 (HLL) and st23 (bottom-k sample): per
+    * micro-batch, fold the batch to a delta sketch, merge
     * into the current generation, land the merge as a NEW generation
     * directory (the A/B flip — readers of gen N are never disturbed),
     * and advance. EXACTLY-ONCE gated (judge r18 item 1): the applied
@@ -2144,51 +2055,21 @@ object Streams {
       .orderBy($"event_id")
       .as[(Long, String, Long)]
       .collect()
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      (Long, String, Long)](
-      implicitly[org.apache.spark.sql.Encoder[(Long, String, Long)]],
-      s2.sqlContext)
-    val root = java.nio.file.Files.createTempDirectory("graft_st19_").toFile
-    val maintainer = new SketchMaintainer(root,
-      batch => graft.Graft.hdrBuckets(batch, "event_type", batch("cents")),
-      (prev, d) => graft.Graft.hdrMerge(prev, d))
-    val q = in.toDS().toDF("event_id", "event_type", "cents")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        maintainer.apply(batch, batchId)
-      }
-      .outputMode(OutputMode.Append)
-      .start()
-    val chunks = {
-      val chunk = math.max(1, (data.length + 2) / 3)
-      data.grouped(chunk).toSeq
+    withScratch("graft_st19_") { root =>
+      val m = new SketchMaintainer(root,
+        batch => graft.Graft.hdrBuckets(batch, "event_type", batch("cents")),
+        (prev, d) => graft.Graft.hdrMerge(prev, d))
+      val chunks = feedBatches(s, data.toSeq, 3,
+        "event_id", "event_type", "cents")(m.apply)
+      // re-deliver the final micro-batch (checkpointed-source retry):
+      // the batchId gate must no-op it — an ADDITIVE hdr re-merge would
+      // double every bucket count and the quantile oracle would fail
+      m(chunks.last.toDF("event_id", "event_type", "cents"),
+        (chunks.length - 1).toLong)
+      graft.Graft.hdrQuantilesFromBuckets(s.read.parquet(m.currentPath),
+          "event_type", Seq(500, 950, 990))
+        .orderBy($"event_type", $"permille")
     }
-    try {
-      chunks.foreach { c =>
-        in.addData(c.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    // re-deliver the final micro-batch (checkpointed-source retry):
-    // the batchId gate must no-op it — an ADDITIVE hdr re-merge would
-    // double every bucket count and the quantile oracle would fail
-    maintainer.apply(
-      chunks.last.toSeq.toDF("event_id", "event_type", "cents"),
-      (chunks.length - 1).toLong)
-    val sketch = s.read.parquet(maintainer.currentPath)
-    val out = graft.Graft.hdrQuantilesFromBuckets(sketch, "event_type",
-        Seq(500, 950, 990))
-      .orderBy($"event_type", $"permille")
-      .localCheckpoint(true)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(root)
-    out
   }
 
   /** st22 — streaming DISTINCT-COUNT monitoring via the mergeable HLL
@@ -2216,54 +2097,23 @@ object Streams {
       .collect()
     require(data.nonEmpty,
       s"st22: empty events slice (user_id % 5 == 2) in $dir")
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      (Long, Long)](
-      implicitly[org.apache.spark.sql.Encoder[(Long, Long)]],
-      s2.sqlContext)
-    val root = java.nio.file.Files.createTempDirectory("graft_st22_").toFile
-    val maintainer = new SketchMaintainer(root,
-      batch => graft.Graft.hllRegisters(batch.select(col("user_id")),
-          "user_id")
-        .select(col("bucket"), col("max_rho")),
-      (prev, d) => graft.Graft.hllUnionRegisters(prev, d)
-        .select(col("bucket"),
-          col("rho_union").cast("int").as("max_rho")))
-    val q = in.toDS().toDF("event_id", "user_id")
-      .writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-        maintainer.apply(batch, batchId)
-      }
-      .outputMode(OutputMode.Append)
-      .start()
-    val chunks = {
-      val chunk = math.max(1, (data.length + 2) / 3)
-      data.grouped(chunk).toSeq
+    withScratch("graft_st22_") { root =>
+      val m = new SketchMaintainer(root,
+        batch => graft.Graft.hllRegisters(batch.select(col("user_id")),
+            "user_id")
+          .select(col("bucket"), col("max_rho")),
+        (prev, d) => graft.Graft.hllUnionRegisters(prev, d)
+          .select(col("bucket"),
+            col("rho_union").cast("int").as("max_rho")))
+      val chunks = feedBatches(s, data.toSeq, 3, "event_id", "user_id")(m.apply)
+      // re-deliver the final micro-batch (checkpointed-source retry):
+      // HLL's register max happens to be idempotent, but the uniform
+      // exactly-once discipline still gates it — the no-op is pinned by
+      // the generation NOT advancing (BatchReplaySpec) and the oracle
+      // stays the from-scratch register rebuild either way
+      m(chunks.last.toDF("event_id", "user_id"), (chunks.length - 1).toLong)
+      s.read.parquet(m.currentPath).orderBy($"bucket")
     }
-    try {
-      chunks.foreach { c =>
-        in.addData(c.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    // re-deliver the final micro-batch (checkpointed-source retry):
-    // HLL's register max happens to be idempotent, but the uniform
-    // exactly-once discipline still gates it — the no-op is pinned by
-    // the generation NOT advancing (BatchReplaySpec) and the oracle
-    // stays the from-scratch register rebuild either way
-    maintainer.apply(chunks.last.toSeq.toDF("event_id", "user_id"),
-      (chunks.length - 1).toLong)
-    val out = s.read.parquet(maintainer.currentPath)
-      .orderBy($"bucket")
-      .localCheckpoint(true)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
-    }
-    rm(root)
-    out
   }
 
   case class HhIn(event_type: String, user_id: Long)
@@ -2376,14 +2226,16 @@ object Streams {
     * aggregate), run genuinely incrementally on the st19
     * standing-table pattern: a 1-in-5-user event slice replays
     * through a real streaming query whose `foreachBatch` sink keeps a
-    * STANDING per-event-type sample table — each micro-batch unions
-    * the standing sample rows with its delta and re-folds the
-    * bottom-k (bottom-k(bottom-k(A) ∪ B) = bottom-k(A ∪ B), the
+    * STANDING per-event-type sample table through [[SketchMaintainer]]
+    * — each micro-batch folds its own bottom-k as the delta, and the
+    * merge re-folds the standing sample rows with it
+    * (bottom-k(bottom-k(A) ∪ bottom-k(B)) = bottom-k(A ∪ B), the
     * reservoir's mergeability, so the chunking can never change the
-    * answer). The order hash is recomputed from the payload
-    * (md5-derived, deterministic), so the standing table stores only
-    * (event_type, user_id) — k rows per key, the entire streaming
-    * state.
+    * answer; the maintainer's batchId gate keeps a re-delivered batch
+    * from sampling a user twice). The order hash is recomputed from
+    * the payload (md5-derived, deterministic), so the standing table
+    * stores only (event_type, user_id) — k rows per key, the entire
+    * streaming state.
     *
     * This is live sample maintenance at 100 TB: "keep 5 random rows
     * per key, always current, never rescan history" — each trigger
@@ -2402,57 +2254,27 @@ object Streams {
       .collect()
     require(data.nonEmpty,
       s"st23: empty events slice (user_id % 5 == 4) in $dir")
-    val hv = "cast(conv(substring(md5(cast(user_id as string)), 1, 15), 16, 10) as bigint)"
-    val s2 = s.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions", "4")
-    s2.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val in = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[
-      (Long, String, Long)](
-      implicitly[org.apache.spark.sql.Encoder[(Long, String, Long)]],
-      s2.sqlContext)
-    val root = java.nio.file.Files.createTempDirectory("graft_st23_").toFile
-    @volatile var cur: Option[String] = None
-    val gen = new java.util.concurrent.atomic.AtomicInteger(0)
-    val q = in.toDS().toDF("event_id", "event_type", "user_id")
-      .writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val delta = batch.select(col("event_type"), col("user_id"))
-        val pool = cur match {
-          case Some(p) =>
-            batch.sparkSession.read.parquet(p).unionByName(delta)
-          case None => delta
-        }
-        val folded = graft.Graft.reservoirSample(
-            pool.withColumn("__hv", expr(hv)),
-            "event_type", col("__hv"), col("user_id"), k = 5)
-          .select(col("event_type"), col("sampled").as("user_id"))
-        val next = new java.io.File(root, s"gen${gen.incrementAndGet()}").getPath
-        folded.write.mode("overwrite").parquet(next)
-        cur = Some(next)
-        ()
-      }
-      .outputMode(OutputMode.Append)
-      .start()
-    try {
-      val chunk = math.max(1, (data.length + 2) / 3)
-      data.grouped(chunk).foreach { c =>
-        in.addData(c.toIndexedSeq: _*)
-        q.processAllAvailable()
-      }
-    } finally q.stop()
-    val standing = s.read.parquet(cur.getOrElse(
-      throw new IllegalStateException("st23: no batch ever committed")))
-    val out = graft.Graft.reservoirSample(
-        standing.withColumn("__hv", expr(hv)),
-        "event_type", col("__hv"), col("user_id"), k = 5)
-      .withColumnRenamed("sampled", "user_id")
-      .orderBy($"event_type", $"rk")
-      .localCheckpoint(true)
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(): Unit
+    withScratch("graft_st23_") { root =>
+      val m = new SketchMaintainer(root, st23Delta, st23Merge)
+      feedBatches(s, data.toSeq, 3, "event_id", "event_type", "user_id")(m.apply)
+      st23Sample(s.read.parquet(m.currentPath))
+        .withColumnRenamed("sampled", "user_id")
+        .orderBy($"event_type", $"rk")
     }
-    rm(root)
-    out
   }
+
+  /** st23's bottom-k: 5 users per event type, ranked by an md5-derived
+    * hash of the user id. */
+  private def st23Sample(df: DataFrame): DataFrame = graft.Graft.reservoirSample(
+    df.withColumn("__hv", expr(
+      "cast(conv(substring(md5(cast(user_id as string)), 1, 15), 16, 10) as bigint)")),
+    "event_type", col("__hv"), col("user_id"), k = 5)
+
+  /** st23's delta: a batch's own sample, as (event_type, user_id). */
+  private[graft] def st23Delta(batch: DataFrame): DataFrame =
+    st23Sample(batch).select(col("event_type"), col("sampled").as("user_id"))
+
+  /** st23's merge: the sample of the standing rows ∪ a delta. */
+  private[graft] def st23Merge(prev: DataFrame, d: DataFrame): DataFrame =
+    st23Delta(prev.unionByName(d))
 }

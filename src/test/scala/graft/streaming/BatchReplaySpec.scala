@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.SparkSuiteBase
 import graft.internal.{BatchIdJournal, LayoutFs}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Exactly-once pins for the streaming at-rest maintainers (judge r18
@@ -184,26 +185,41 @@ class BatchReplaySpec extends SparkSuiteBase {
   }
 
   test("SketchMaintainer (st19/st22 shape): replaying a batchId neither double-counts nor regenerates") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-repsk").toFile
-    val m = new Streams.SketchMaintainer(root,
-      batch => batch.groupBy($"k").agg(sum($"x").as("n")),
-      (prev, d) => prev.unionByName(d).groupBy($"k")
-        .agg(sum($"n").as("n")))
-    val b0 = Seq(("a", 1L), ("a", 2L), ("b", 5L)).toDF("k", "x")
-    m.apply(b0, 0L)
-    val gen1 = m.currentPath
-    val once = spark.read.parquet(gen1).as[(String, Long)]
-      .collect().sorted.toSeq
-    // the replay: an ADDITIVE merge would double every count and the
-    // generation would advance — both must not happen
-    m.apply(b0, 0L)
-    assert(m.currentPath == gen1, "replay must not advance the generation")
-    assert(spark.read.parquet(m.currentPath).as[(String, Long)]
-      .collect().sorted.toSeq == once, "replay double-counted the sketch")
-    // a fresh id merges
-    m.apply(Seq(("a", 10L)).toDF("k", "x"), 1L)
-    assert(spark.read.parquet(m.currentPath).as[(String, Long)]
-      .collect().sorted.toSeq == Seq(("a", 13L), ("b", 5L)))
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+    // st23's users 1..12 and 13..20: more than k = 5 per event type, so
+    // the sample evicts, and a re-merged batch would sample a user twice
+    def users(ids: Range) = ids.map(u => (if (u % 2 == 0) "click" else "view", u.toLong))
+      .toDF("event_type", "user_id")
+    // (input, delta, merge, batch 0, batch 1)
+    val inputs = Seq[(String, DataFrame => DataFrame,
+        (DataFrame, DataFrame) => DataFrame, DataFrame, DataFrame)](
+      ("additive sum",
+        batch => batch.groupBy($"k").agg(sum($"x").as("n")),
+        (prev, d) => prev.unionByName(d).groupBy($"k").agg(sum($"n").as("n")),
+        Seq(("a", 1L), ("a", 2L), ("b", 5L)).toDF("k", "x"),
+        Seq(("a", 10L)).toDF("k", "x")),
+      ("st23 bottom-k sample", Streams.st23Delta, Streams.st23Merge,
+        users(1 to 12), users(13 to 20)))
+    inputs.foreach { case (name, delta, merge, b0, b1) =>
+      val root = java.nio.file.Files
+        .createTempDirectory("graft-repsk").toFile
+      try {
+        val m = new Streams.SketchMaintainer(root, delta, merge)
+        m.apply(b0, 0L)
+        val gen1 = m.currentPath
+        val once = rows(spark.read.parquet(gen1))
+        // the replay: an ADDITIVE merge would double every count, a
+        // sample would hold a user twice, and the generation would
+        // advance — none of it may happen
+        m.apply(b0, 0L)
+        assert(m.currentPath == gen1, s"$name: replay must not advance the generation")
+        assert(rows(spark.read.parquet(m.currentPath)) == once,
+          s"$name: replay changed the standing table")
+        // a fresh id merges: the result equals one delta over both batches
+        m.apply(b1, 1L)
+        assert(rows(spark.read.parquet(m.currentPath)) ==
+          rows(delta(b0.unionByName(b1))), s"$name: merge diverged from one fold")
+      } finally graft.ops.Layout.rmQuiet(root)
+    }
   }
 }

@@ -25,9 +25,9 @@
 #
 # Last, it runs each side once more with `--trace 1` at first-seed and
 # prints base -> change for the counters host load cannot move: Spark
-# jobs, stages and tasks, shuffle bytes written and records, and cache
-# bytes written. Those runs are kept as
-# $AB_DIR/<side>.<workload>.<first-seed>.trace.json.
+# jobs, stages and tasks, shuffle bytes written and records, cache
+# bytes written, streaming micro-batches and Catalyst query executions.
+# Those runs are kept as $AB_DIR/<side>.<workload>.<first-seed>.trace.json.
 set -euo pipefail
 rev=${1:?usage: $0 <rev> <workload> <first-seed> <pairs> [seconds]}
 workload=${2:?workload}
@@ -113,7 +113,8 @@ for side in ("base", "change"):
         sides.append({})
 print(f"# counters, one --trace 1 run per side at seed {seed}: base -> change")
 for k in ("sched.jobs", "sched.stages", "sched.tasks", "shuffle.write_bytes",
-          "shuffle.records", "cache.bytes_written"):
+          "shuffle.records", "cache.bytes_written", "streams.batches",
+          "catalyst.executions"):
     b, c = (m[k]["value"] if k in m else None for m in sides)
     fmt = lambda v: "n/a" if v is None else f"{v:.0f}"
     delta = "" if b is None or c is None else f" ({c - b:+.0f})"
