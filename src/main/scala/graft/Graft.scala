@@ -19,9 +19,6 @@ import org.apache.spark.sql.graftshim.PartitionedCheckpoint.{
   * claim to the query body) except these, which only specs exercise:
   *  - [[topKPerGroup]]: the plain window spelling that specs hold
   *    [[topKPerGroupNative]] (the form the queries run) equal to;
-  *  - [[assignToCentroids]]: one projection of the centroid argmax that
-  *    d14 ([[semanticDedupWithCentroids]]) and s07 ([[kmeansFitLong]])
-  *    run under the gate;
   *  - [[expireSnapshots]]: its sweep runs under d32's
   *    [[rollbackSnapshot]]; the verb itself only deletes files;
   *  - [[expireSnapshotsOlderThan]]: its answer depends on file
@@ -851,8 +848,10 @@ object Graft {
     * hold driver-side (k x dim floats) and unroll into the codegen'd
     * greatest()-argmax — a pure map, no shuffle, no join; this is the
     * assignment [[semanticDedupWithCentroids]] and [[kmeansFitLong]]
-    * iterations run. `centroids`: (centroid_id, c) — [[kmeansFit]]'s
-    * output shape. Ties to the larger centroid id (the engine-wide
+    * iterations run, and the IVF posting builds (s26/s28/s30/s31,
+    * st29's per-batch appends) call this method under the oracle
+    * gate. `centroids`: (centroid_id, c) — [[kmeansFit]]'s output
+    * shape. Ties to the larger centroid id (the engine-wide
     * convention). */
   def assignToCentroids(df: DataFrame, vecCol: String,
       centroids: DataFrame): DataFrame =

@@ -73,7 +73,7 @@ private[graft] final class LayoutFs(val fs: FileSystem) {
       require(fs.rename(src, dst), s"rename failed: $src -> $dst")
     }
 
-  /** Zero-byte completion marker (`_APPEND_DONE` / `_INC_DONE`). */
+  /** Zero-byte completion marker ([[graft.ops.Layout.derived]]'s). */
   def touch(p: Path): Unit = fs.create(p, true).close()
 
   def writeText(p: Path, text: String): Unit = {
@@ -102,20 +102,6 @@ private[graft] object LayoutFs {
     val p = new Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     (new LayoutFs(fs), fs.makeQualified(p))
-  }
-
-  /** Completion-marker probe for the build-once index fixtures
-    * (`_APPEND_DONE` / `_INC_DONE`; Spark's own `_SUCCESS`). */
-  def markerExists(s: SparkSession, dirPath: String, name: String): Boolean = {
-    val (lfs, root) = of(s, dirPath)
-    lfs.exists(new Path(root, name))
-  }
-
-  /** Drop a zero-byte completion marker after a multi-step build. */
-  def touchMarker(s: SparkSession, dirPath: String, name: String): Unit = {
-    val (lfs, root) = of(s, dirPath)
-    lfs.mkdirs(root)
-    lfs.touch(new Path(root, name))
   }
 }
 

@@ -227,20 +227,14 @@ object Multimodal {
 
   /** Materialize the fake media as a REAL parquet asset table — the
     * payload as a parquet `binary` column, metadata (width, height,
-    * n_bytes) as sidecar columns — under java.io.tmpdir, one table per
-    * source dir. This is the storage layout the header note prescribes
-    * for 100 TB corpora; m04 proves the claimed benefit on it. */
-  private[graft] def mediaParquet(s: SparkSession, dir: String): String = {
-    // Layout.tag: 64-bit MD5 prefix of the source dir — the shared
-    // collision-safe suffix (a 32-bit String.hashCode tag could serve
-    // one dir's media copy for another; ADVICE round 7)
-    val path = Layout.tmpPath("media", dir)
-    Layout.sweepStaleFor("media", dir)
-    fakeMedia(s, dir).toDF()
+    * n_bytes) as sidecar columns — under java.io.tmpdir, written once
+    * per source dir ([[Layout.derived]]). This is the storage layout
+    * the header note prescribes for 100 TB corpora; m04 proves the
+    * claimed benefit on it. */
+  private[graft] def mediaParquet(s: SparkSession, dir: String): String =
+    Layout.derived(s, "media", dir)(fakeMedia(s, dir).toDF()
       .withColumn("n_bytes", length(col("media")).cast("long"))
-      .write.mode("overwrite").parquet(path)
-    path
-  }
+      .write.mode("overwrite").parquet(_))
 
   /** m04 — metadata-pushdown sampling proof: filter + aggregate the
     * asset table on METADATA ONLY. The parquet scan must read just the
@@ -471,17 +465,15 @@ object Multimodal {
     * landing zone a multimodal pipeline ingests from (one blob per
     * asset, id in the filename). The payload is the documents' UTF-8
     * bytes (the m03 argument), one file per doc of the % 10 == 3
-    * slice, staged once per (JVM, source dir) under the Layout tag
-    * with a `_SUCCESS` guard + stale-sibling sweep. The driver-side
+    * slice, staged once per source dir by [[Layout.derived]]. The
+    * driver-side
     * write is FIXTURE staging (standing in for the store), not the
     * operator — the operator is [[m07BinaryIngest]]'s distributed
     * scan. */
   private[graft] def mediaFiles(s: SparkSession, dir: String): String = {
     import s.implicits._
-    val path = Layout.tmpPath("m07bin", dir)
-    val root = new java.io.File(path)
-    if (!new java.io.File(root, "_SUCCESS").exists()) {
-      Layout.sweepStaleFor("m07bin", dir)
+    Layout.derived(s, "m07bin", dir) { path =>
+      val root = new java.io.File(path)
       root.mkdirs()
       Tables(s, dir, "documents").filter($"doc_id" % 10 === 3)
         .select($"doc_id", $"text").as[(Long, String)].collect()
@@ -490,16 +482,14 @@ object Multimodal {
             new java.io.File(root, f"doc_$id%08d.bin").toPath,
             t.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         }
-      new java.io.File(root, "_SUCCESS").createNewFile()
     }
-    path
   }
 
   /** m07 — `binaryFile`-source ingestion: the raw-asset scan that
     * turns a directory of blobs into the (id, size, fingerprint) rows
     * an asset catalog starts from — the step BEFORE m03's
     * parquet-resident dedup. `pathGlobFilter` prunes non-asset files
-    * at listing time (the `_SUCCESS` marker never reaches a task);
+    * at listing time (the completion marker never reaches a task);
     * the id parses from the filename; `length` comes from file-status
     * metadata; the content bytes feed ONLY the md5 projection.
     *

@@ -527,24 +527,23 @@ object Similarity {
     * scaladoc names: (vec_id, embedding) hive-partitioned by the
     * 6-bit signature via [[graft.Graft.writePartitioned]] (q31's
     * write-side half), one directory per bucket, materialized once
-    * per (JVM, source dir) under java.io.tmpdir with q31's `_SUCCESS`
-    * guard. The signature is stored as INT so the read-back partition
+    * per source dir under java.io.tmpdir ([[Layout.derived]]). The
+    * signature is stored as INT so the read-back partition
     * column type (Spark infers int from the directory values) matches
     * the written one exactly. At 100 TB this is the layout decision
     * that turns ANN probing from "stream the corpus per query set"
     * (s12) into "list 7 directories per query": the probe filter
     * prunes FILES at plan time. */
-  private[graft] def s13IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("lsh_idx", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_SUCCESS")) {
-      Layout.sweepStaleFor("lsh_idx", dir)
-      import s.implicits._
-      graft.Graft.writePartitioned(
-        Tables(s, dir, "embeddings").select($"vec_id", $"embedding",
-          s12SigOf($"embedding").cast("int").as("sig")),
-        "sig", path)
-    }
-    path
+  private[graft] def s13IndexPath(s: SparkSession, dir: String): String =
+    Layout.derived(s, "lsh_idx", dir)(
+      graft.Graft.writePartitioned(lshRows(s, dir), "sig", _))
+
+  /** The corpus as LSH index rows: (vec_id, embedding, sig), the
+    * signature as INT. */
+  private def lshRows(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    Tables(s, dir, "embeddings").select($"vec_id", $"embedding",
+      s12SigOf($"embedding").cast("int").as("sig"))
   }
 
   /** The multi-probe set of a query batch, signatures as INT to match
@@ -597,31 +596,25 @@ object Similarity {
       .orderBy($"query_id", $"rank")
   }
 
-  /** The s25 index: s13's at-rest layout built INCREMENTALLY — the
-    * base index holds 90% of the corpus (vec_id % 10 != 7, "the index
-    * as of yesterday"), then the remaining 10% appends as today's
-    * batch via [[graft.Graft.partitionedAppend]]: signatures computed
-    * for the BATCH ONLY, written as new files into the existing sig
+  /** The LSH base+append index, s13's at-rest layout built
+    * INCREMENTALLY under `kind`'s own directory: the base holds 90% of
+    * the corpus (vec_id % 10 != 7, "the index as of yesterday"), then
+    * the remaining 10% appends as today's batch via
+    * [[graft.Graft.partitionedAppend]]: signatures computed for the
+    * BATCH ONLY, written as new files into the existing sig
     * directories, zero base files read or rewritten (SimilaritySpec
     * pins both properties by listing the base files before/after).
-    * Materialized once per (JVM, source dir) behind an append-marker
-    * guard; a half-built layout (no marker) rebuilds from scratch —
-    * the overwrite base write makes the recovery idempotent. */
-  private[graft] def s25IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("lsh_inc", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_APPEND_DONE")) {
-      Layout.sweepStaleFor("lsh_inc", dir)
-      import s.implicits._
-      val emb = Tables(s, dir, "embeddings").select($"vec_id", $"embedding",
-        s12SigOf($"embedding").cast("int").as("sig"))
-      graft.Graft.writePartitioned(emb.filter($"vec_id" % 10 =!= 7),
+    * Each mutating query passes its own kind — s25 `lsh_inc`, s27
+    * `lsh_cmp` (compacts in place), s29 `lsh_del` and st30 `lsh_sdel`
+    * (tombstone in place) — so no query sees another's mutations. */
+  private[graft] def lshIndex(s: SparkSession, kind: String, dir: String): String =
+    Layout.derived(s, kind, dir) { path =>
+      val emb = lshRows(s, dir)
+      graft.Graft.writePartitioned(emb.filter(col("vec_id") % 10 =!= 7),
         "sig", path)
-      graft.Graft.partitionedAppend(emb.filter($"vec_id" % 10 === 7),
+      graft.Graft.partitionedAppend(emb.filter(col("vec_id") % 10 === 7),
         "sig", path)
-      graft.internal.LayoutFs.touchMarker(s, path, "_APPEND_DONE")
     }
-    path
-  }
 
   /** The s13/s25/s27/s29 shared search stage over an at-rest LSH
     * layout: probe set, plan-time partition-pruned scan, exact cosine
@@ -645,13 +638,13 @@ object Similarity {
       .orderBy($"query_id", $"rank")
   }
 
-  private def lshSearchOver(s: SparkSession, dir: String,
+  private[graft] def lshSearchOver(s: SparkSession, dir: String,
       path: String): DataFrame =
     lshSearchCorpus(s, dir, sigs => s13PrunedScan(s, path, sigs))
 
   /** s25 — ANN search over the INCREMENTALLY-MAINTAINED LSH index:
     * s13's probe set, pruned scan, and scoring, but the index was
-    * built as base + appended batch ([[s25IndexPath]]) instead of one
+    * built as base + appended batch ([[lshIndex]]) instead of one
     * shot. The oracle is the FROM-SCRATCH pipeline (s12/s13's
     * generated SQL over the full corpus) — the incremental-equals-
     * rebuild gate d15/d16 established, applied to ANN (judge r15
@@ -661,26 +654,7 @@ object Similarity {
     * as before, and [[graft.Graft.compactIndex]] is the occasional
     * maintenance pass when appended files accumulate (s27 gates it). */
   def s25IncAppend(s: SparkSession, dir: String): DataFrame =
-    lshSearchOver(s, dir, s25IndexPath(s, dir))
-
-  /** s27's own base+append layout copy (tag `lsh_cmp`) — s27 compacts
-    * its index IN PLACE, and s25's spec pins the pre-compaction file
-    * layout of ITS copy, so the two must not share a directory. */
-  private[graft] def s27IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("lsh_cmp", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_APPEND_DONE")) {
-      Layout.sweepStaleFor("lsh_cmp", dir)
-      import s.implicits._
-      val emb = Tables(s, dir, "embeddings").select($"vec_id", $"embedding",
-        s12SigOf($"embedding").cast("int").as("sig"))
-      graft.Graft.writePartitioned(emb.filter($"vec_id" % 10 =!= 7),
-        "sig", path)
-      graft.Graft.partitionedAppend(emb.filter($"vec_id" % 10 === 7),
-        "sig", path)
-      graft.internal.LayoutFs.touchMarker(s, path, "_APPEND_DONE")
-    }
-    path
-  }
+    lshSearchOver(s, dir, lshIndex(s, "lsh_inc", dir))
 
   /** LIVE data-file count per partition directory — from the latest
     * committed manifest when one exists, else the raw directory
@@ -730,7 +704,8 @@ object Similarity {
     * to a one-shot index. Idempotent: a re-run finds zero multi-file
     * partitions and compactIndex is metadata-only, job-free. */
   def s27CompactedSearch(s: SparkSession, dir: String): DataFrame = {
-    val path = s27IndexPath(s, dir)
+    // s25's spec pins the pre-compaction layout of ITS copy
+    val path = lshIndex(s, "lsh_cmp", dir)
     val before = lshSearchOver(s, dir, path).collect()
     graft.Graft.compactIndex(s, path, "sig")
     val fragmented = liveFilesPerPartition(s, path)
@@ -748,44 +723,52 @@ object Similarity {
     afterDf
   }
 
-  /** Nearest-centroid cell assignment against FROZEN centroids — the
-    * posting-build half of the at-rest IVF index, shared by the s26
-    * base build and its batch append so both phases assign under the
-    * identical argmax (same tie-break as [[graft.Graft.ivfSearch]]:
-    * max cos, then max centroid_id). */
-  private def s26Assign(df: DataFrame, cent: DataFrame): DataFrame =
-    df.crossJoin(broadcast(cent))
-      .select(col("vec_id"), col("embedding"), col("centroid_id"),
-        cosine(col("embedding"), col("c")).as("cos"))
-      .groupBy(col("vec_id"))
-      .agg(max(struct(col("cos"), col("centroid_id"), col("embedding")))
-        .as("best"))
-      .select(col("vec_id"), col("best.embedding").as("embedding"),
-        col("best.centroid_id").cast("int").as("cell"))
+  /** IVF posting rows: (vec_id, embedding, cell), the cell being the
+    * nearest centroid by [[graft.Graft.assignToCentroids]] — a pure
+    * map, ties to the larger centroid id (the [[graft.Graft.ivfSearch]]
+    * tie-break). */
+  private def cellRows(df: DataFrame, cent: DataFrame): DataFrame =
+    graft.Graft.assignToCentroids(df, "embedding", cent)
+      .select(col("vec_id"), col("embedding"), col("cluster").cast("int").as("cell"))
 
-  /** The s26 index: s02's IVF posting lists AT REST and maintained
-    * INCREMENTALLY — (vec_id, embedding) hive-partitioned by the
-    * assigned centroid cell, base = 90% of the corpus, then the
-    * remaining 10% appends via [[graft.Graft.partitionedAppend]] with
-    * assignment against the SAME frozen centroids (no retraining —
-    * the defining property of IVF maintenance: the model is fixed,
-    * only postings grow). Build guarded exactly like [[s25IndexPath]]. */
-  private[graft] def s26IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("ivf_inc", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_APPEND_DONE")) {
-      Layout.sweepStaleFor("ivf_inc", dir)
-      import s.implicits._
-      val emb = Tables(s, dir, "embeddings").select($"vec_id", $"embedding")
-      val cent = emb.filter($"vec_id" < 16)
-        .select($"vec_id".as("centroid_id"), $"embedding".as("c"))
-      graft.Graft.writePartitioned(
-        s26Assign(emb.filter($"vec_id" % 10 =!= 7), cent), "cell", path)
-      graft.Graft.partitionedAppend(
-        s26Assign(emb.filter($"vec_id" % 10 === 7), cent), "cell", path)
-      graft.internal.LayoutFs.touchMarker(s, path, "_APPEND_DONE")
-    }
-    path
+  /** The frozen IVF model: the first 16 corpus vectors as
+    * (centroid_id, c). */
+  private def frozenCentroids(emb: DataFrame): DataFrame =
+    emb.filter(col("vec_id") < 16)
+      .select(col("vec_id").as("centroid_id"), col("embedding").as("c"))
+
+  private def ivfCorpus(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+
+  /** The base half of the IVF posting index: 90% of the corpus
+    * assigned against the frozen centroids and hive-partitioned by
+    * cell at `path`. st29's streaming maintainer builds only this
+    * half. */
+  private[graft] def ivfBase(s: SparkSession, dir: String)(path: String): Unit = {
+    val emb = ivfCorpus(s, dir)
+    graft.Graft.writePartitioned(
+      cellRows(emb.filter(col("vec_id") % 10 =!= 7), frozenCentroids(emb)),
+      "cell", path)
   }
+
+  /** s02's IVF posting lists AT REST and maintained INCREMENTALLY:
+    * [[ivfBase]], then the remaining 10% appends via
+    * [[graft.Graft.partitionedAppend]] with assignment against the
+    * SAME frozen centroids (no retraining — the defining property of
+    * IVF maintenance: the model is fixed, only postings grow). */
+  private def ivfBuild(s: SparkSession, dir: String)(path: String): Unit = {
+    ivfBase(s, dir)(path)
+    val emb = ivfCorpus(s, dir)
+    graft.Graft.partitionedAppend(
+      cellRows(emb.filter(col("vec_id") % 10 === 7), frozenCentroids(emb)),
+      "cell", path)
+  }
+
+  /** [[ivfBuild]]'s index under `kind`'s own directory: s26 `ivf_inc`,
+    * s28 `ivf_cmp` (compacts in place), s30 `ivf_del` (tombstones in
+    * place). s31's `ivf_mig` adds the migrate step to the same build. */
+  private[graft] def ivfIndex(s: SparkSession, kind: String, dir: String): String =
+    Layout.derived(s, kind, dir)(ivfBuild(s, dir))
 
   /** s26 — IVF ANN search over the INCREMENTALLY-MAINTAINED posting
     * layout: s02's probe discipline (top-nProbe cells per query
@@ -800,7 +783,7 @@ object Similarity {
     * daily batch pays batch×k assignment cosines and batch-sized
     * writes, never a corpus re-index. */
   def s26IvfAppend(s: SparkSession, dir: String): DataFrame =
-    ivfSearchOver(s, dir, s26IndexPath(s, dir))
+    ivfSearchOver(s, dir, ivfIndex(s, "ivf_inc", dir))
 
   /** The s26/s28/s30 shared IVF search over an at-rest posting
     * layout: probe cells from the frozen centroids, plan-time
@@ -808,14 +791,9 @@ object Similarity {
     * the probed cells to the posting frame (the lshSearchCorpus seam,
     * IVF half). */
   private def ivfSearchCorpus(s: SparkSession, dir: String,
-      corpusOf: Seq[Int] => DataFrame): DataFrame = {
-    import s.implicits._
-    val emb = Tables(s, dir, "embeddings")
+      corpusOf: Seq[Int] => DataFrame): DataFrame =
     ivfSearchCorpusWith(s, dir,
-      emb.filter($"vec_id" < 16)
-        .select($"vec_id".as("centroid_id"), $"embedding".as("c")),
-      corpusOf)
-  }
+      frozenCentroids(Tables(s, dir, "embeddings")), corpusOf)
 
   /** [[ivfSearchCorpus]] generalized over the centroid MODEL — s31
     * probes the migrated layout with the RETRAINED centroids, the
@@ -845,28 +823,11 @@ object Similarity {
       .orderBy($"query_id", $"rank")
   }
 
-  /** st30's seams into the LSH purge family: its own base+append
-    * layout copy (tag `lsh_sdel` — streamed tombstoning and
-    * compact-out mutate in place, the s29 isolation argument), the
-    * purge request set with BATCH-SIDE signatures (the s29
-    * request-not-index discipline), and the masked/plain at-rest
-    * searches, exposed to the streaming purge harness
+  /** st30's seams into the LSH purge family: the purge request set
+    * with BATCH-SIDE signatures (the s29 request-not-index
+    * discipline) and the masked at-rest search, exposed to the
+    * streaming purge harness
     * ([[graft.streaming.Streams.st30PurgeStream]]). */
-  private[graft] def st30IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("lsh_sdel", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_APPEND_DONE")) {
-      Layout.sweepStaleFor("lsh_sdel", dir)
-      import s.implicits._
-      val emb = Tables(s, dir, "embeddings").select($"vec_id", $"embedding",
-        s12SigOf($"embedding").cast("int").as("sig"))
-      graft.Graft.writePartitioned(emb.filter($"vec_id" % 10 =!= 7),
-        "sig", path)
-      graft.Graft.partitionedAppend(emb.filter($"vec_id" % 10 === 7),
-        "sig", path)
-      graft.internal.LayoutFs.touchMarker(s, path, "_APPEND_DONE")
-    }
-    path
-  }
   private[graft] def purgeRequests(s: SparkSession, dir: String): DataFrame =
     purgeSet(s, dir)
       .select(col("vec_id"), s12SigOf(col("embedding")).cast("int").as("sig"))
@@ -875,42 +836,11 @@ object Similarity {
     lshSearchCorpus(s, dir, sigs =>
       graft.Graft.readMasked(s, path, "vec_id")
         .filter(col("sig").isin(sigs: _*)))
-  private[graft] def lshSearchAt(s: SparkSession, dir: String,
-      path: String): DataFrame = lshSearchOver(s, dir, path)
 
-  /** st29's seams into the IVF family: cell assignment under a frozen
-    * centroid model and the shared at-rest search, exposed to the
-    * streaming maintainer
-    * ([[graft.streaming.Streams.st29IvfMaintenance]]). */
-  private[graft] def assignCells(df: DataFrame, cent: DataFrame): DataFrame =
-    s26Assign(df, cent)
-  private[graft] def ivfSearchAt(s: SparkSession, dir: String,
-      path: String): DataFrame = ivfSearchOver(s, dir, path)
-
-  private def ivfSearchOver(s: SparkSession, dir: String,
+  private[graft] def ivfSearchOver(s: SparkSession, dir: String,
       path: String): DataFrame =
     ivfSearchCorpus(s, dir, cells =>
       graft.Graft.readSnapshot(s, path).filter(col("cell").isin(cells: _*)))
-
-  /** s28's own IVF base+append layout copy (tag `ivf_cmp`) — the s27
-    * argument: compaction mutates the directory in place, so it must
-    * not share s26's fixture. */
-  private[graft] def s28IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("ivf_cmp", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_APPEND_DONE")) {
-      Layout.sweepStaleFor("ivf_cmp", dir)
-      import s.implicits._
-      val emb = Tables(s, dir, "embeddings").select($"vec_id", $"embedding")
-      val cent = emb.filter($"vec_id" < 16)
-        .select($"vec_id".as("centroid_id"), $"embedding".as("c"))
-      graft.Graft.writePartitioned(
-        s26Assign(emb.filter($"vec_id" % 10 =!= 7), cent), "cell", path)
-      graft.Graft.partitionedAppend(
-        s26Assign(emb.filter($"vec_id" % 10 === 7), cent), "cell", path)
-      graft.internal.LayoutFs.touchMarker(s, path, "_APPEND_DONE")
-    }
-    path
-  }
 
   /** s28 — IVF posting-layout compaction under the same
     * answer-invariance gate as s27 (its LSH twin — together they close
@@ -922,7 +852,7 @@ object Similarity {
     * cycle (assign -> append -> compact) answers identically to a
     * one-shot build. */
   def s28IvfCompact(s: SparkSession, dir: String): DataFrame = {
-    val path = s28IndexPath(s, dir)
+    val path = ivfIndex(s, "ivf_cmp", dir)
     val before = ivfSearchOver(s, dir, path).collect()
     graft.Graft.compactIndex(s, path, "cell")
     // live per-manifest count, not a raw listing: retention keeps the
@@ -950,25 +880,6 @@ object Similarity {
   }
   private[graft] val PurgePredSql = "vec_id % 10 = 3 AND vec_id >= 16"
 
-  /** s29's own base+append layout copy (tag `lsh_del`) — tombstoning
-    * and compact-out mutate the directory in place, so it must not
-    * share s25/s27's fixtures (the s27 isolation argument). */
-  private[graft] def s29IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("lsh_del", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_APPEND_DONE")) {
-      Layout.sweepStaleFor("lsh_del", dir)
-      import s.implicits._
-      val emb = Tables(s, dir, "embeddings").select($"vec_id", $"embedding",
-        s12SigOf($"embedding").cast("int").as("sig"))
-      graft.Graft.writePartitioned(emb.filter($"vec_id" % 10 =!= 7),
-        "sig", path)
-      graft.Graft.partitionedAppend(emb.filter($"vec_id" % 10 === 7),
-        "sig", path)
-      graft.internal.LayoutFs.touchMarker(s, path, "_APPEND_DONE")
-    }
-    path
-  }
-
   /** s29 — tombstone DELETION from the at-rest LSH index under the
     * oracle gate (the GDPR path into the ANN family — c09 audits the
     * relational purge cascade; this executes the index half):
@@ -991,7 +902,7 @@ object Similarity {
     * adds one broadcast anti-join, and the rewrite touches the purge
     * set's partition footprint — never the index. */
   def s29TombstonePurge(s: SparkSession, dir: String): DataFrame = {
-    val path = s29IndexPath(s, dir)
+    val path = lshIndex(s, "lsh_del", dir)
     val purge = purgeSet(s, dir)
       .select(col("vec_id"), s12SigOf(col("embedding")).cast("int").as("sig"))
     graft.Graft.tombstone(path, purge, "vec_id", "sig")
@@ -1007,25 +918,6 @@ object Similarity {
     afterDf
   }
 
-  /** s30's own IVF layout copy (tag `ivf_del`) — the s29 isolation
-    * argument, posting-list half. */
-  private[graft] def s30IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("ivf_del", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_APPEND_DONE")) {
-      Layout.sweepStaleFor("ivf_del", dir)
-      import s.implicits._
-      val emb = Tables(s, dir, "embeddings").select($"vec_id", $"embedding")
-      val cent = emb.filter($"vec_id" < 16)
-        .select($"vec_id".as("centroid_id"), $"embedding".as("c"))
-      graft.Graft.writePartitioned(
-        s26Assign(emb.filter($"vec_id" % 10 =!= 7), cent), "cell", path)
-      graft.Graft.partitionedAppend(
-        s26Assign(emb.filter($"vec_id" % 10 === 7), cent), "cell", path)
-      graft.internal.LayoutFs.touchMarker(s, path, "_APPEND_DONE")
-    }
-    path
-  }
-
   /** s30 — tombstone deletion from the at-rest IVF posting layout:
     * s29's four-step cycle (tombstone → masked search → compact-out →
     * byte-identical plain search) with the victim's partition value
@@ -1038,11 +930,9 @@ object Similarity {
     * (s25/s26) and compaction (s27/s28) passes maintain. */
   def s30TombstoneIvf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = s30IndexPath(s, dir)
-    val emb = Tables(s, dir, "embeddings")
-    val cent = emb.filter($"vec_id" < 16)
-      .select($"vec_id".as("centroid_id"), $"embedding".as("c"))
-    val purge = s26Assign(purgeSet(s, dir), cent).select($"vec_id", $"cell")
+    val path = ivfIndex(s, "ivf_del", dir)
+    val purge = cellRows(purgeSet(s, dir), frozenCentroids(ivfCorpus(s, dir)))
+      .select($"vec_id", $"cell")
     graft.Graft.tombstone(path, purge, "vec_id", "cell")
     val masked = ivfSearchCorpus(s, dir, cells =>
       graft.Graft.readMasked(s, path, "vec_id")
@@ -1056,25 +946,13 @@ object Similarity {
 
   /** s31's own IVF base+append layout copy (tag `ivf_mig`) built on
     * the FROZEN first-16 centroids, then migrated in place to the
-    * RETRAINED model by [[s31Migrate]] — its isolation argument is
-    * s30's: migration mutates the directory. */
-  private[graft] def s31IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("ivf_mig", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_MIG_DONE")) {
-      Layout.sweepStaleFor("ivf_mig", dir)
-      import s.implicits._
-      val emb = Tables(s, dir, "embeddings").select($"vec_id", $"embedding")
-      val cent = emb.filter($"vec_id" < 16)
-        .select($"vec_id".as("centroid_id"), $"embedding".as("c"))
-      graft.Graft.writePartitioned(
-        s26Assign(emb.filter($"vec_id" % 10 =!= 7), cent), "cell", path)
-      graft.Graft.partitionedAppend(
-        s26Assign(emb.filter($"vec_id" % 10 === 7), cent), "cell", path)
+    * RETRAINED model by [[graft.Graft.ivfMigrate]] — its isolation
+    * argument is s30's: migration mutates the directory. */
+  private def s31IndexPath(s: SparkSession, dir: String): String =
+    Layout.derived(s, "ivf_mig", dir) { path =>
+      ivfBuild(s, dir)(path)
       graft.Graft.ivfMigrate(s, path, s31Centroids(s, dir)): Unit
-      graft.internal.LayoutFs.touchMarker(s, path, "_MIG_DONE")
     }
-    path
-  }
 
   /** The retrained model s31 migrates to: s07's k-means (k=16, 2
     * Lloyd iterations over the FULL corpus — the "centroids drifted
@@ -1116,8 +994,7 @@ object Similarity {
     // (atRest is a bare snapshot scan: cheaper re-read than cached).
     // gatePersist, not localCheckpoint: the source is the immutable
     // embeddings table, so lineage recompute is always valid (r21)
-    val scratch = graft.Graft.gatePersist(
-      s26Assign(emb, cent.select($"centroid_id", $"c")))
+    val scratch = graft.Graft.gatePersist(cellRows(emb, cent))
     val atRest = graft.Graft.readSnapshot(s, path)
       .select($"vec_id", $"embedding", $"cell")
     val disagree = atRest.exceptAll(scratch)
@@ -1337,10 +1214,8 @@ object Similarity {
     * nSub small ints per vector, the 4-32x-smaller artifact a serving
     * tier actually loads (the full floats stay in cold storage and
     * are touched only by the rerank join). */
-  private[graft] def s23IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("pq_idx", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_SUCCESS")) {
-      Layout.sweepStaleFor("pq_idx", dir)
+  private[graft] def s23IndexPath(s: SparkSession, dir: String): String =
+    Layout.derived(s, "pq_idx", dir) { path =>
       import s.implicits._
       val emb = Tables(s, dir, "embeddings")
       graft.Graft.pqEncode(emb.select($"vec_id", $"embedding"),
@@ -1348,8 +1223,6 @@ object Similarity {
           nSub = 8)
         .write.mode("overwrite").parquet(path)
     }
-    path
-  }
 
   /** s23 — s15's PQ search OVER THE AT-REST CODE TABLE: build once
     * ([[s23IndexPath]]), then serve by loading codes and running ADC +

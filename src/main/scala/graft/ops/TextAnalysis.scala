@@ -1147,24 +1147,18 @@ object TextAnalysis {
     * commit that lands the batch's pack assignments (the
     * BatchIdJournal discipline); the harness leaves it frozen at the
     * lake snapshot so the query is idempotent across invocations. */
-  private[graft] def t45CursorPath(s: SparkSession, dir: String): String = {
-    val path = graft.ops.Layout.tmpPath("pack_cur", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_CUR_DONE")) {
-      graft.ops.Layout.sweepStaleFor("pack_cur", dir)
-      import s.implicits._
+  private[graft] def t45CursorPath(s: SparkSession, dir: String): String =
+    Layout.derived(s, "pack_cur", dir) { path =>
       val total = Tables.spread(Tables(s, dir, "documents"))
-        .filter($"doc_id" % 5 < 4)
-        .agg(sum(size(tokens($"text")).cast("long")))
+        .filter(col("doc_id") % 5 < 4)
+        .agg(sum(size(tokens(col("text"))).cast("long")))
         .first().getLong(0)
       val (lfs, root) = graft.internal.LayoutFs.of(s, path)
       lfs.mkdirs(root)
       lfs.writeText(
         new org.apache.hadoop.fs.Path(root, "_total_tokens"),
         total.toString)
-      graft.internal.LayoutFs.touchMarker(s, path, "_CUR_DONE")
     }
-    path
-  }
 
   /** t45 — INCREMENTAL concat-split append under the oracle gate: the
     * daily-crawl batch (doc_id % 5 == 4) extends the t44 pack layout

@@ -1161,36 +1161,39 @@ object TextDedup {
       "doc_id", "text")
       .orderBy(col("id_a"), col("id_b"), col("start_a"), col("start_b"))
 
-  /** d28's at-rest POSITIONAL GRAM INDEX (tag `sub_idx`): the lake's
-    * (doc_id, pos, h) table — exactly the artifact [[substringRuns]]
-    * builds internally and throws away — persisted hive-partitioned
-    * by a hash bucket of the gram (`gb = pmod(h, 32)`), base 90% +
-    * [[graft.Graft.partitionedAppend]] for the rest (the d15/s25
-    * at-rest maintenance discipline, so the index grows per crawl
-    * batch with new files only). Bucketing by the JOIN key is what
-    * makes the incremental probe prune: a batch's gram hashes name
-    * their buckets arithmetically, and unprobed buckets never load.
-    * Size per doc is (tokens - k + 1) 12-byte rows — index-sized,
-    * not corpus-sized (no text at rest; d15's argument). */
-  private[graft] def d28IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("sub_idx", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_APPEND_DONE")) {
-      Layout.sweepStaleFor("sub_idx", dir)
-      import s.implicits._
-      val grams = Tables.spread(Tables(s, dir, "documents"))
-        .filter($"doc_id" % 5 < 4)
-        .select($"doc_id",
-          posexplode(shingleHashes($"text", 8)).as(Seq("pos", "h")))
-        .withColumn("gb", pmod($"h", lit(32)).cast("int"))
-      graft.Graft.writePartitioned(grams.filter($"doc_id" % 10 =!= 7),
+  /** The positional gram rows of `df`'s (doc_id, text): (doc_id, pos,
+    * h, gb), 8-token grams, `gb = pmod(h, 32)` the hash bucket the
+    * gram indexes partition by. d28's index build and st28's streamed
+    * appends both project through here, so a batch lands in the
+    * buckets the lake was built with. */
+  private[graft] def gramRows(df: DataFrame): DataFrame = df
+    .select(col("doc_id"),
+      posexplode(shingleHashes(col("text"), 8)).as(Seq("pos", "h")))
+    .withColumn("gb", pmod(col("h"), lit(32)).cast("int"))
+
+  /** The at-rest POSITIONAL GRAM INDEX under `kind`'s own directory
+    * (d28 `sub_idx`; d29 `sub_del`, which purges in place): the
+    * lake's (doc_id, pos, h) table — exactly the artifact
+    * [[substringRuns]] builds internally and throws away — persisted
+    * hive-partitioned by a hash bucket of the gram ([[gramRows]]),
+    * base 90% + [[graft.Graft.partitionedAppend]] for the rest (the
+    * d15/s25 at-rest maintenance discipline, so the index grows per
+    * crawl batch with new files only). Bucketing by the JOIN key is
+    * what makes the incremental probe prune: a batch's gram hashes
+    * name their buckets arithmetically, and unprobed buckets never
+    * load. Size per doc is (tokens - k + 1) 12-byte rows —
+    * index-sized, not corpus-sized (no text at rest; d15's
+    * argument). */
+  private[graft] def gramIndex(s: SparkSession, kind: String, dir: String): String =
+    Layout.derived(s, kind, dir) { path =>
+      val grams = gramRows(Tables.spread(Tables(s, dir, "documents"))
+        .filter(col("doc_id") % 5 < 4))
+      graft.Graft.writePartitioned(grams.filter(col("doc_id") % 10 =!= 7),
         "gb", path)
-      graft.Graft.partitionedAppend(grams.filter($"doc_id" % 10 === 7),
+      graft.Graft.partitionedAppend(grams.filter(col("doc_id") % 10 === 7),
         "gb", path)
       writeGramBuckets(s, path, 32)
-      graft.internal.LayoutFs.touchMarker(s, path, "_APPEND_DONE")
     }
-    path
-  }
 
   /** INCREMENTAL substring-run dedup: every maximal >= `minRunTokens`
     * verbatim token run shared between an incoming batch and the LAKE,
@@ -1198,7 +1201,7 @@ object TextDedup {
     * counterpart of [[substringRuns]] (judge r17 missing item 2: d15
     * covers exact, d16 near-dup, s25/s26 ANN, d25 labels; long-run
     * detection had no incremental path). The lake side is the
-    * PERSISTED positional gram index ([[d28IndexPath]]'s layout — no
+    * PERSISTED positional gram index ([[gramIndex]]'s layout — no
     * re-shingling of standing documents, ever); only the batch
     * tokenizes.
     *
@@ -1320,33 +1323,9 @@ object TextDedup {
     import s.implicits._
     val batch = Tables.spread(Tables(s, dir, "documents"))
       .filter($"doc_id" % 5 === 4)
-    substringRunsIncremental(s, d28IndexPath(s, dir), batch,
+    substringRunsIncremental(s, gramIndex(s, "sub_idx", dir), batch,
       "doc_id", "text")
       .orderBy($"id_a", $"id_b", $"start_a", $"start_b")
-  }
-
-  /** d29's own gram-index copy (tag `sub_del`) — purge mutates the
-    * directory in place, so it must not share d28's fixture (the
-    * s29/d26 isolation argument). Build cycle identical to
-    * [[d28IndexPath]]. */
-  private[graft] def d29IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("sub_del", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_APPEND_DONE")) {
-      Layout.sweepStaleFor("sub_del", dir)
-      import s.implicits._
-      val grams = Tables.spread(Tables(s, dir, "documents"))
-        .filter($"doc_id" % 5 < 4)
-        .select($"doc_id",
-          posexplode(shingleHashes($"text", 8)).as(Seq("pos", "h")))
-        .withColumn("gb", pmod($"h", lit(32)).cast("int"))
-      graft.Graft.writePartitioned(grams.filter($"doc_id" % 10 =!= 7),
-        "gb", path)
-      graft.Graft.partitionedAppend(grams.filter($"doc_id" % 10 === 7),
-        "gb", path)
-      writeGramBuckets(s, path, 32)
-      graft.internal.LayoutFs.touchMarker(s, path, "_APPEND_DONE")
-    }
-    path
   }
 
   /** d29 — tombstone deletion from the at-rest POSITIONAL GRAM index,
@@ -1371,7 +1350,8 @@ object TextDedup {
     * documents excluded from the lake side. */
   def d29GramPurge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = d29IndexPath(s, dir)
+    // purge mutates the directory in place: its own copy, not d28's
+    val path = gramIndex(s, "sub_del", dir)
     val docs = Tables.spread(Tables(s, dir, "documents"))
     // %20 ∈ {8, 16} ⊂ lake (mod 5 = 3, 1): roots the purge in the
     // lake, and 16 hits planted run participants at every SF — the
@@ -1411,37 +1391,43 @@ object TextDedup {
     afterDf
   }
 
-  /** The d25 label STORE: d23's incremental-components cadence taken
-    * at rest — standing star components (5-wide, over customer ids)
-    * are labeled, written via [[graft.Graft.componentsIndex]]
-    * (root-bucketed layout), and the batch link edges (every 35th id
-    * bridges two adjacent stars into a <= 10-node component) merge in
-    * via [[graft.Graft.componentsIncremental]] — the copy-on-write
-    * relabel that rewrites ONLY the buckets holding a remapped root.
-    * Guarded once per (JVM, source dir) behind a completion marker; a
-    * half-built or half-swapped layout (no marker) rebuilds from
-    * scratch — the overwrite base write makes recovery idempotent
-    * (the s25 discipline). */
-  private[graft] def d25IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("cmp_idx", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_INC_DONE")) {
-      Layout.sweepStaleFor("cmp_idx", dir)
-      import s.implicits._
-      val cust = Tables(s, dir, "customer").select($"c_custkey".as("c"))
-      val standing = cust
-        .select($"c".as("id_a"), ($"c" - $"c" % 5).as("id_b"))
-        .filter($"id_a" =!= $"id_b")
-      graft.Graft.componentsIndex(componentMin(standing), path)
-      val batch = cust.filter($"c" % 35 === 0)
-        .select($"c".as("id_a"), ($"c" + 5).as("id_b"))
-      graft.Graft.componentsIncremental(s, path, batch): Unit
-      graft.internal.LayoutFs.touchMarker(s, path, "_INC_DONE")
-    }
-    path
+  private def custIds(s: SparkSession, dir: String): DataFrame =
+    Tables(s, dir, "customer").select(col("c_custkey").as("c"))
+
+  /** The base half of the label STORE: standing star components
+    * (5-wide, over customer ids) labeled and written at `path` via
+    * [[graft.Graft.componentsIndex]] (root-bucketed layout). st27's
+    * streaming maintainer builds only this half. */
+  private[graft] def labelBase(s: SparkSession, dir: String)(path: String): Unit = {
+    val c = col("c")
+    graft.Graft.componentsIndex(componentMin(custIds(s, dir)
+      .select(c.as("id_a"), (c - c % 5).as("id_b"))
+      .filter(col("id_a") =!= col("id_b"))), path)
   }
 
+  /** The label STORE under `kind`'s own directory — d23's
+    * incremental-components cadence taken at rest: [[labelBase]], then
+    * the batch link edges (every 35th id bridges two adjacent stars
+    * into a <= 10-node component) merge in via
+    * [[graft.Graft.componentsIncremental]] — the copy-on-write relabel
+    * that rewrites ONLY the buckets holding a remapped root. The merge
+    * is MERGE-ONLY (both endpoints are standing vertices, so no
+    * fresh-vertex append follows the swap), which leaves exactly two
+    * retained snapshot versions: the bootstrap manifest of the
+    * pre-merge labeling and the post-merge state. Kinds: d25
+    * `cmp_idx`; d26 `cmp_del` (purges in place); d30 `cmp_tt`
+    * (time travel, shared with d31); d32 `cmp_rb` (rolls back
+    * manifests in place). */
+  private[graft] def labelStore(s: SparkSession, kind: String, dir: String): String =
+    Layout.derived(s, kind, dir) { path =>
+      labelBase(s, dir)(path)
+      val c = col("c")
+      graft.Graft.componentsIncremental(s, path, custIds(s, dir)
+        .filter(c % 35 === 0).select(c.as("id_a"), (c + 5).as("id_b"))): Unit
+    }
+
   /** d25 — the PERSISTED component-label store under the oracle gate:
-    * the full at-rest labeling after [[d25IndexPath]]'s build → append
+    * the full at-rest labeling after [[labelStore]]'s build → append
     * cycle, hash-checked against DuckDB's from-scratch recursive-CTE
     * closure over standing ∪ batch edges — the answer the incremental
     * at-rest relabel must reproduce exactly (d23 gates the in-memory
@@ -1450,37 +1436,9 @@ object TextDedup {
     * construction, so the oracle closure is linear in ids. */
   def d25PersistedComponents(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    graft.Graft.componentsRead(s, d25IndexPath(s, dir))
+    graft.Graft.componentsRead(s, labelStore(s, "cmp_idx", dir))
       .select($"id".as("node_id"), $"root".as("component_id"))
       .orderBy($"node_id")
-  }
-
-  /** d30's own label-store copy (tag `cmp_tt`) — the TIME-TRAVEL
-    * fixture (judge r19 item 1): the d25 build cycle (standing star
-    * components at rest, then ONE incremental merge batch) leaves the
-    * layout with exactly two retained snapshot versions — the
-    * bootstrap manifest of the PRE-merge labeling (written by the
-    * swap's commit before it journals) and the post-merge state. The
-    * merge batch is deliberately MERGE-ONLY (both endpoints are
-    * standing vertices, so no fresh-vertex append follows the swap and
-    * no third manifest version evicts the bootstrap from the
-    * default-2 retention window). */
-  private[graft] def d30IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("cmp_tt", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_INC_DONE")) {
-      Layout.sweepStaleFor("cmp_tt", dir)
-      import s.implicits._
-      val cust = Tables(s, dir, "customer").select($"c_custkey".as("c"))
-      val standing = cust
-        .select($"c".as("id_a"), ($"c" - $"c" % 5).as("id_b"))
-        .filter($"id_a" =!= $"id_b")
-      graft.Graft.componentsIndex(componentMin(standing), path)
-      val batch = cust.filter($"c" % 35 === 0)
-        .select($"c".as("id_a"), ($"c" + 5).as("id_b"))
-      graft.Graft.componentsIncremental(s, path, batch): Unit
-      graft.internal.LayoutFs.touchMarker(s, path, "_INC_DONE")
-    }
-    path
   }
 
   /** d30 — TIME-TRAVEL read of the label store under the oracle gate
@@ -1496,7 +1454,7 @@ object TextDedup {
     * on its own fixture. */
   def d30TimeTravel(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = d30IndexPath(s, dir)
+    val path = labelStore(s, "cmp_tt", dir)
     val versions = graft.Graft.snapshotVersions(s, path)
     require(versions.size >= 2,
       s"d30 expects the pre-merge bootstrap version retained, got $versions")
@@ -1524,7 +1482,7 @@ object TextDedup {
     * never a recompute of either closure. */
   def d31SnapshotChanges(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = d30IndexPath(s, dir)
+    val path = labelStore(s, "cmp_tt", dir)
     val versions = graft.Graft.snapshotVersions(s, path)
     require(versions.size >= 2,
       s"d31 expects the pre-merge bootstrap version retained, got $versions")
@@ -1554,19 +1512,7 @@ object TextDedup {
     * undoing a bad 100 TB commit instant. */
   def d32SnapshotRollback(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = Layout.tmpPath("cmp_rb", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_INC_DONE")) {
-      Layout.sweepStaleFor("cmp_rb", dir)
-      val cust = Tables(s, dir, "customer").select($"c_custkey".as("c"))
-      val standing = cust
-        .select($"c".as("id_a"), ($"c" - $"c" % 5).as("id_b"))
-        .filter($"id_a" =!= $"id_b")
-      graft.Graft.componentsIndex(componentMin(standing), path)
-      val batch = cust.filter($"c" % 35 === 0)
-        .select($"c".as("id_a"), ($"c" + 5).as("id_b"))
-      graft.Graft.componentsIncremental(s, path, batch): Unit
-      graft.internal.LayoutFs.touchMarker(s, path, "_INC_DONE")
-    }
+    val path = labelStore(s, "cmp_rb", dir)
     val versions = graft.Graft.snapshotVersions(s, path)
     require(versions.nonEmpty, s"d32 expects a snapshot-carrying layout")
     graft.Graft.rollbackSnapshot(s, path, versions.head, retain = 1)
@@ -1575,39 +1521,14 @@ object TextDedup {
       .orderBy($"node_id")
   }
 
-  /** d26's own label-store copy (tag `cmp_del`) — purge mutates the
-    * directory in place, so it must not share d25's fixture (the
-    * s27/s29 isolation argument). Build cycle identical to
-    * [[d25IndexPath]]: standing closure at rest, then one incremental
-    * batch merge. */
-  private[graft] def d26IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("cmp_del", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_INC_DONE")) {
-      Layout.sweepStaleFor("cmp_del", dir)
-      import s.implicits._
-      val cust = Tables(s, dir, "customer").select($"c_custkey".as("c"))
-      val standing = cust
-        .select($"c".as("id_a"), ($"c" - $"c" % 5).as("id_b"))
-        .filter($"id_a" =!= $"id_b")
-      graft.Graft.componentsIndex(componentMin(standing), path)
-      val batch = cust.filter($"c" % 35 === 0)
-        .select($"c".as("id_a"), ($"c" + 5).as("id_b"))
-      graft.Graft.componentsIncremental(s, path, batch): Unit
-      graft.internal.LayoutFs.touchMarker(s, path, "_INC_DONE")
-    }
-    path
-  }
-
   /** d27's own at-rest exact-fingerprint index copy (tag `fp_del`) —
     * the [[graft.Graft.exactIndex]] artifact PERSISTED (what d15/d21
     * derive inline each run, a real pipeline keeps between batches),
     * hive-partitioned by a hash bucket of the fingerprint so purges
     * and probes prune directories. Mutated in place by d27, so it
     * shares nothing (the s29 isolation argument). */
-  private[graft] def d27IndexPath(s: SparkSession, dir: String): String = {
-    val path = Layout.tmpPath("fp_del", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_SUCCESS")) {
-      Layout.sweepStaleFor("fp_del", dir)
+  private[graft] def d27IndexPath(s: SparkSession, dir: String): String =
+    Layout.derived(s, "fp_del", dir) { path =>
       import s.implicits._
       val lake = Tables(s, dir, "documents").filter($"doc_id" % 5 < 4)
       graft.Graft.writePartitioned(
@@ -1616,8 +1537,6 @@ object TextDedup {
             pmod(xxhash64($"content_hash"), lit(32)).cast("int")),
         "hb", path)
     }
-    path
-  }
 
   /** d27 — tombstone deletion from the AT-REST exact-fingerprint
     * index, closing the GDPR loop for the third index family the
@@ -1701,7 +1620,7 @@ object TextDedup {
     * metadata-only. */
   def d26LabelPurge(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = d26IndexPath(s, dir)
+    val path = labelStore(s, "cmp_del", dir)
     val purge = Tables(s, dir, "customer")
       .select($"c_custkey".as("id"))
       .filter($"id" % 20 === 0 || $"id" % 20 === 7)

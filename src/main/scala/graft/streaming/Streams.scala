@@ -976,7 +976,7 @@ object Streams {
     * catch-up on a schedule); the checkpoint's seen-files log and the
     * sink's commit log are both O(files), not O(rows), and the rate
     * limit bounds per-trigger memory. Idempotent per (JVM, source
-    * content): the layout-copy tag pattern (Layout.tmpPath) keys
+    * content): the layout-copy owner (Layout.derived) keys
     * checkpoint+sink+source together, so a Bench re-run launches
     * catch-ups that find nothing new and the sink is stable; a
     * testdata regeneration re-keys everything and rebuilds. Harness
@@ -990,15 +990,12 @@ object Streams {
     val slice = Tables(s, dir, "events")
       .filter($"user_id" % 10 === 3)
       .select($"event_id", $"user_id", $"event_type", $"value")
-    val root = graft.ops.Layout.tmpPath("st12", dir)
+    val root = graft.ops.Layout.derived(s, "st12", dir)(p =>
+      slice.filter($"event_id" % 3 =!= 0).repartition(6)
+        .write.mode("overwrite").parquet(s"$p/src"))
     val srcDir = s"$root/src"
     val ckpt = s"$root/ckpt"
     val outDir = s"$root/out"
-    if (!new java.io.File(srcDir, "_SUCCESS").exists()) {
-      graft.ops.Layout.sweepStaleFor("st12", dir)
-      slice.filter($"event_id" % 3 =!= 0).repartition(6)
-        .write.mode("overwrite").parquet(srcDir)
-    }
     st12CatchUp(s, srcDir, slice.schema, ckpt, outDir)
     // generation 2 lands AFTER the first catch-up: staged write, then
     // deterministic renames into the landing dir (one file at a time —
@@ -1250,17 +1247,8 @@ object Streams {
     * d25/d26's directories. */
   def st27LabelMaintenance(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = graft.ops.Layout.tmpPath("cmp_stream", dir)
-    if (!graft.internal.LayoutFs.markerExists(s, path, "_BASE_DONE")) {
-      graft.ops.Layout.sweepStaleFor("cmp_stream", dir)
-      val cust = Tables(s, dir, "customer").select($"c_custkey".as("c"))
-      val standing = cust
-        .select($"c".as("id_a"), ($"c" - $"c" % 5).as("id_b"))
-        .filter($"id_a" =!= $"id_b")
-      graft.Graft.componentsIndex(
-        graft.ops.TextDedup.componentMin(standing), path)
-      graft.internal.LayoutFs.touchMarker(s, path, "_BASE_DONE")
-    }
+    val path = graft.ops.Layout.derived(s, "cmp_stream", dir)(
+      graft.ops.TextDedup.labelBase(s, dir))
     val cust = Tables(s, dir, "customer").select($"c_custkey".as("c"))
     val data = cust.filter($"c" % 35 === 0)
       .select($"c".as("id_a"), ($"c" + 5).as("id_b"))
@@ -1308,20 +1296,29 @@ object Streams {
     * rewrites existing ones, so deleting every data file absent from
     * the base manifest (written once at base build) restores the
     * snapshot without re-shingling the lake. */
-  /** Reset an appended at-rest layout to its recorded base snapshot —
+  /** `kind`'s appended at-rest layout, reset to its base snapshot —
     * the st28/st29 replay discipline: appends are not idempotent
     * across harness invocations, so each invocation starts from the
-    * committed base. METADATA-only, never a rebuild:
-    * [[graft.Graft.partitionedAppend]] adds new files and never
-    * rewrites existing ones, so deleting every data file absent from
-    * the base manifest (written once at base build) restores the
-    * snapshot; append-born partition dirs drop when emptied, and the
-    * applied-batch journal clears so the next stream's ids (again
-    * 0, 1, …) do not spuriously no-op. */
-  private def resetToBase(lfs: graft.internal.LayoutFs,
-      rootP: org.apache.hadoop.fs.Path, partitionCol: String,
-      manifest: org.apache.hadoop.fs.Path): Unit = {
-    val keep = lfs.readText(manifest).split("\n").filter(_.nonEmpty).toSet
+    * committed base. [[graft.ops.Layout.derived]] runs `build` once and
+    * records the base's data files in a base manifest; every call then
+    * resets, which on a fresh base is a no-op. METADATA-only, never a
+    * rebuild: [[graft.Graft.partitionedAppend]] adds new files and
+    * never rewrites existing ones, so deleting every data file absent
+    * from the base manifest restores the snapshot; append-born
+    * partition dirs drop when emptied, and the applied-batch journal
+    * clears so the next stream's ids (again 0, 1, …) do not spuriously
+    * no-op. */
+  private def baseLayout(s: SparkSession, kind: String, dir: String,
+      partitionCol: String)(build: String => Unit): String = {
+    val path = graft.ops.Layout.derived(s, kind, dir) { p =>
+      build(p)
+      val (lfs, rootP) = graft.internal.LayoutFs.of(s, p)
+      lfs.writeText(new org.apache.hadoop.fs.Path(rootP, BaseManifest),
+        graft.internal.SnapshotManifest.liveDataFiles(lfs, rootP).mkString("\n"))
+    }
+    val (lfs, rootP) = graft.internal.LayoutFs.of(s, path)
+    val keep = lfs.readText(new org.apache.hadoop.fs.Path(rootP, BaseManifest))
+      .split("\n").filter(_.nonEmpty).toSet
     lfs.partitionDirs(rootP, partitionCol).foreach { d =>
       lfs.dataFiles(d).foreach { f =>
         if (!keep.contains(s"${d.getName}/${f.getPath.getName}"))
@@ -1330,7 +1327,10 @@ object Streams {
       if (lfs.dataFiles(d).isEmpty) lfs.rmTree(d) // append-born dir
     }
     resetLayoutMeta(lfs, rootP)
+    path
   }
+
+  private val BaseManifest = "_base_manifest"
 
   /** Forget a layout's snapshot/commit metadata alongside a reset to
     * its base files: the atomic appenders ([[graft.Graft
@@ -1351,12 +1351,6 @@ object Streams {
       rootP.getParent, rootP.getName + "__appending"))
     graft.internal.BatchIdJournal.clear(lfs, rootP)
   }
-
-  private def st28GramsOf(df: DataFrame): DataFrame = df
-    .select(col("doc_id"),
-      posexplode(graft.ops.TextDedup.shingleHashes(col("text"), 8))
-        .as(Seq("pos", "h")))
-    .withColumn("gb", pmod(col("h"), lit(32)).cast("int"))
 
   /** st28's per-batch maintenance body, factored out and EXACTLY-ONCE
     * gated — ATOMICALLY since r20 (judge r19 item 2): a checkpointed
@@ -1389,28 +1383,15 @@ object Streams {
         .unionAll(graft.ops.TextDedup.substringRuns(b, "doc_id", "text")),
       outPath, batchId): Unit
     graft.Graft.partitionedAppendCommit(
-      st28GramsOf(b), "gb", indexPath, batchId): Unit
+      graft.ops.TextDedup.gramRows(b), "gb", indexPath, batchId): Unit
   }
 
   def st28GramMaintenance(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = graft.ops.Layout.tmpPath("sub_stream", dir)
     val docs = Tables(s, dir, "documents")
-    def gramsOf(df: DataFrame): DataFrame = st28GramsOf(df)
-    val (lfs, rootP) = graft.internal.LayoutFs.of(s, path)
-    val manifest = new org.apache.hadoop.fs.Path(rootP, "_base_manifest")
-    def fileKeys(): Seq[String] =
-      lfs.partitionDirs(rootP, "gb").toSeq.flatMap(d =>
-        lfs.dataFiles(d).map(f => s"${d.getName}/${f.getPath.getName}"))
-    if (graft.internal.LayoutFs.markerExists(s, path, "_BASE_DONE")) {
-      resetToBase(lfs, rootP, "gb", manifest)
-    } else {
-      graft.ops.Layout.sweepStaleFor("sub_stream", dir)
-      graft.Graft.writePartitioned(
-        gramsOf(Tables.spread(docs).filter($"doc_id" % 5 < 4)), "gb", path)
-      lfs.writeText(manifest, fileKeys().mkString("\n"))
-      graft.internal.LayoutFs.touchMarker(s, path, "_BASE_DONE")
-    }
+    val path = baseLayout(s, "sub_stream", dir, "gb")(
+      graft.Graft.writePartitioned(graft.ops.TextDedup.gramRows(
+        Tables.spread(docs).filter($"doc_id" % 5 < 4)), "gb", _))
     val data = docs.filter($"doc_id" % 5 === 4)
       .select($"doc_id", $"text")
       .orderBy($"doc_id")
@@ -1456,8 +1437,10 @@ object Streams {
     import ss.implicits._
     val centDf = cent.toDF("centroid_id", "c")
     graft.Graft.partitionedAppendCommit(
-      graft.ops.Similarity.assignCells(
-        batch.select(col("vec_id"), col("embedding")), centDf),
+      graft.Graft.assignToCentroids(
+          batch.select(col("vec_id"), col("embedding")), "embedding", centDf)
+        .select(col("vec_id"), col("embedding"),
+          col("cluster").cast("int").as("cell")),
       "cell", indexPath, batchId): Unit
   }
 
@@ -1485,25 +1468,12 @@ object Streams {
     * same way). */
   def st29IvfMaintenance(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = graft.ops.Layout.tmpPath("ivf_stream", dir)
+    val path = baseLayout(s, "ivf_stream", dir, "cell")(
+      graft.ops.Similarity.ivfBase(s, dir))
     val emb = Tables(s, dir, "embeddings").select($"vec_id", $"embedding")
-    val cent = emb.filter($"vec_id" < 16)
+    val centRows = emb.filter($"vec_id" < 16)
       .select($"vec_id".as("centroid_id"), $"embedding".as("c"))
-    val centRows = cent.as[(Long, Array[Float])].collect().toSeq
-    val (lfs, rootP) = graft.internal.LayoutFs.of(s, path)
-    val manifest = new org.apache.hadoop.fs.Path(rootP, "_base_manifest")
-    if (graft.internal.LayoutFs.markerExists(s, path, "_BASE_DONE")) {
-      resetToBase(lfs, rootP, "cell", manifest)
-    } else {
-      graft.ops.Layout.sweepStaleFor("ivf_stream", dir)
-      graft.Graft.writePartitioned(
-        graft.ops.Similarity.assignCells(
-          emb.filter($"vec_id" % 10 =!= 7), cent), "cell", path)
-      lfs.writeText(manifest,
-        graft.internal.SnapshotManifest.liveDataFiles(lfs, rootP)
-          .mkString("\n"))
-      graft.internal.LayoutFs.touchMarker(s, path, "_BASE_DONE")
-    }
+      .as[(Long, Array[Float])].collect().toSeq
     val data = emb.filter($"vec_id" % 10 === 7)
       .orderBy($"vec_id")
       .as[(Long, Array[Float])].collect()
@@ -1518,7 +1488,7 @@ object Streams {
     // makes exactly-once an ORACLE-GATED property, not only a spec.
     st29ApplyBatch(path, centRows, chunks.last.toDF("vec_id", "embedding"),
       (chunks.length - 1).toLong)
-    graft.ops.Similarity.ivfSearchAt(s, dir, path)
+    graft.ops.Similarity.ivfSearchOver(s, dir, path)
   }
 
   /** st30's per-batch body: BatchIdJournal-gated tombstone append. A
@@ -1571,7 +1541,8 @@ object Streams {
     * until the single compact pass. */
   def st30PurgeStream(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = graft.ops.Similarity.st30IndexPath(s, dir)
+    // tombstoning and compact-out mutate in place: st30's own copy
+    val path = graft.ops.Similarity.lshIndex(s, "lsh_sdel", dir)
     val (lfs, rootP) = graft.internal.LayoutFs.of(s, path)
     // layout mutation is idempotent across invocations (re-purging
     // absent ids rewrites their partitions unchanged) but stream ids
@@ -1599,7 +1570,7 @@ object Streams {
     // discipline), and the symmetric difference folds into one job.
     // gatePersist since r21: post-compact plan, lineage recompute valid.
     val afterDf = graft.Graft.gatePersist(
-      graft.ops.Similarity.lshSearchAt(s, dir, path))
+      graft.ops.Similarity.lshSearchOver(s, dir, path))
     val disagree =
       masked.exceptAll(afterDf).unionAll(afterDf.exceptAll(masked)).count()
     require(disagree == 0,
@@ -1667,29 +1638,27 @@ object Streams {
     * discipline; appends are not idempotent across invocations). */
   def st31PackMaintenance(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val path = graft.ops.Layout.tmpPath("pack_stream", dir)
-    val (lfs, rootP) = graft.internal.LayoutFs.of(s, path)
-    val baseTotalP = new org.apache.hadoop.fs.Path(rootP, "_base_total")
-    val cursorP = new org.apache.hadoop.fs.Path(rootP, "_total_tokens")
-    if (graft.internal.LayoutFs.markerExists(s, path, "_BASE_DONE")) {
-      // reset: drop every placement file (root-level, unpartitioned),
-      // forget snapshot/commit metadata, rewind the cursor to the lake
-      // base — metadata-only, the lake is not re-tokenized
-      lfs.dataFiles(rootP).foreach(f => lfs.deleteFile(f.getPath))
-      resetLayoutMeta(lfs, rootP)
-      lfs.writeText(cursorP, lfs.readText(baseTotalP).trim)
-    } else {
-      graft.ops.Layout.sweepStaleFor("pack_stream", dir)
+    val path = graft.ops.Layout.derived(s, "pack_stream", dir) { p =>
       val total = Tables.spread(Tables(s, dir, "documents"))
         .filter($"doc_id" % 5 < 4)
         .agg(sum(size(graft.ops.TextDedup.tokens($"text")).cast("long")))
         .first().getLong(0)
+      val (lfs, rootP) = graft.internal.LayoutFs.of(s, p)
       lfs.mkdirs(rootP)
-      lfs.writeText(baseTotalP, total.toString)
-      lfs.writeText(cursorP, total.toString)
-      graft.internal.LayoutFs.touchMarker(s, path, "_BASE_DONE")
+      lfs.writeText(new org.apache.hadoop.fs.Path(rootP, "_base_total"),
+        total.toString)
     }
-    val baseTotal = lfs.readText(baseTotalP).trim.toLong
+    val (lfs, rootP) = graft.internal.LayoutFs.of(s, path)
+    val baseTotal = lfs.readText(
+      new org.apache.hadoop.fs.Path(rootP, "_base_total")).trim.toLong
+    val cursorP = new org.apache.hadoop.fs.Path(rootP, "_total_tokens")
+    // reset (a no-op on a fresh base): drop every placement file
+    // (root-level, unpartitioned), forget snapshot/commit metadata,
+    // rewind the cursor to the lake base — metadata-only, the lake is
+    // not re-tokenized
+    lfs.dataFiles(rootP).foreach(f => lfs.deleteFile(f.getPath))
+    resetLayoutMeta(lfs, rootP)
+    lfs.writeText(cursorP, baseTotal.toString)
     val data = Tables.spread(Tables(s, dir, "documents"))
       .filter($"doc_id" % 5 === 4)
       .select($"doc_id", $"text")

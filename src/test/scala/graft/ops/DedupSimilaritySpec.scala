@@ -761,7 +761,7 @@ class DedupSimilaritySpec extends SparkSuiteBase {
     val base = dataFiles()
     graft.Graft.partitionedAppend(emb.filter($"vec_id" % 10 === 7), "sig", path)
     val after = dataFiles()
-    new java.io.File(path, "_APPEND_DONE").createNewFile()
+    new java.io.File(path, Layout.ReadyMarker).createNewFile()
     assert(base.forall(after.contains),
       "append rewrote or removed base files:\n" +
         base.diff(after).mkString("\n"))
@@ -785,7 +785,7 @@ class DedupSimilaritySpec extends SparkSuiteBase {
       s"incremental IVF diverged: ${inc.diff(oneShot).take(3)}")
     // the probed cells must reach PartitionFilters (the s13 property
     // applied to IVF): non-probed posting lists are never even listed
-    val path = Similarity.s26IndexPath(spark, sf)
+    val path = Similarity.ivfIndex(spark, "ivf_inc", sf)
     val plan = spark.read.parquet(path)
       .filter($"cell".isin(1, 2, 3))
       .queryExecution.executedPlan.toString

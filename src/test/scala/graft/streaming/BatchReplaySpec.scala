@@ -16,6 +16,12 @@ import org.apache.spark.sql.functions._
 class BatchReplaySpec extends SparkSuiteBase {
   import spark.implicits._
 
+  /** IVF posting rows (vec_id, embedding, cell) under `cent`, the
+    * assignment st29's maintainer commits. */
+  private def cells(df: DataFrame, cent: DataFrame): DataFrame =
+    graft.Graft.assignToCentroids(df, "embedding", cent)
+      .select($"vec_id", $"embedding", $"cluster".cast("int").as("cell"))
+
   private def fileSet(path: String): Set[(String, Long)] = {
     val (lfs, root) = LayoutFs.of(spark, path)
     lfs.list(root).filter(_.isDirectory).flatMap(d =>
@@ -87,7 +93,7 @@ class BatchReplaySpec extends SparkSuiteBase {
     val baseRows = Seq((100L, v(0.9f, 0.1f)), (101L, v(0.1f, 0.9f)))
       .toDF("vec_id", "embedding")
     graft.Graft.writePartitioned(
-      graft.ops.Similarity.assignCells(baseRows,
+      cells(baseRows,
         cent.toDF("centroid_id", "c")), "cell", path)
 
     val batch = Seq((200L, v(0.8f, 0.2f)), (201L, v(0.2f, 0.8f)))
@@ -113,7 +119,7 @@ class BatchReplaySpec extends SparkSuiteBase {
     def v(xs: Float*): Array[Float] = xs.toArray
     val cent = Seq((0L, v(1f, 0f)), (1L, v(0f, 1f)))
     graft.Graft.writePartitioned(
-      graft.ops.Similarity.assignCells(
+      cells(
         Seq((100L, v(0.9f, 0.1f)), (101L, v(0.1f, 0.9f)))
           .toDF("vec_id", "embedding"),
         cent.toDF("centroid_id", "c")), "cell", path)
@@ -126,7 +132,7 @@ class BatchReplaySpec extends SparkSuiteBase {
     val batch = Seq((200L, v(0.8f, 0.2f))).toDF("vec_id", "embedding")
     val staging = new org.apache.hadoop.fs.Path(
       root.getParent, root.getName + "__appending")
-    graft.ops.Similarity.assignCells(batch, cent.toDF("centroid_id", "c"))
+    cells(batch, cent.toDF("centroid_id", "c"))
       .repartition(col("cell"))
       .write.partitionBy("cell").mode("overwrite").parquet(staging.toString)
     val stagedDirs = lfs.partitionDirs(staging, "cell").map(_.getName)
